@@ -19,3 +19,41 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def _check_lookup(scan: dict, lookup) -> None:
+    """Point-lookup parity: every tile the scan reader returned (`scan`:
+    (z, x, y) -> bytes) equals lookup(z, x, y); absent neighbours and
+    children, and coordinates outside the pyramid, are misses; 8 threads
+    looking up at once, on cold caches, agree with the serial answers."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    assert scan
+    absent = set()
+    for z, x, y in scan:
+        for k in ((z, x + 1, y), (z, x, y + 1), (z, x - 1, y), (z + 1, 2 * x, 2 * y)):
+            if k not in scan and 0 <= k[1] < 1 << k[0] and 0 <= k[2] < 1 << k[0]:
+                absent.add(k)
+    assert absent
+    keys = list(scan) + sorted(absent)
+    # thread safety, not coverage: an evenly spread sample of hits and misses
+    sample = keys[:: max(1, len(keys) // 2000)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # force thread switches inside lookups
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            got = list(pool.map(lambda k: lookup(*k), sample, timeout=120))
+    finally:
+        sys.setswitchinterval(interval)
+    assert got == [scan.get(k) for k in sample]
+    for k in keys:
+        assert lookup(*k) == scan.get(k), k
+    for z, x, y in scan:
+        n = 1 << z
+        for k in ((z, n, y), (z, x, n), (z, -1, y), (z, x, -1), (32, x, y), (-1, 0, 0)):
+            assert lookup(*k) is None, k
+
+
+@pytest.fixture(scope="session")
+def check_lookup():
+    return _check_lookup

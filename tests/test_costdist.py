@@ -262,3 +262,17 @@ def test_fuzz_least_cost_path(spark, seed, s, solve):
         )
         assert got.get(i, []) == want, f"target {i}"
     assert m["walk_rounds"] >= (1 if solve == "doubling" else 0)
+
+
+def test_auto_super_tiles_tries_non_power_of_two_cap(spark):
+    """tile_size=300 caps S at 2048 // 300 = 6: a 6x6-tile extent is covered
+    by one S=6 block though no power of two up to the cap covers it."""
+    from versatiles_rs_spark.operators.costdist import resolve_super_tiles
+
+    tiles = spark.createDataFrame(
+        [(x, y) for x in range(6) for y in range(6)], "x long, y long"
+    )
+    assert resolve_super_tiles(tiles, 300, "auto") == (6, True)
+    assert resolve_super_tiles(tiles.filter("x < 4 and y < 4"), 300, "auto") == (4, True)
+    assert resolve_super_tiles(tiles.union(spark.createDataFrame([(6, 0)], "x long, y long")),
+                               300, "auto") == (6, False)

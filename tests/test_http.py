@@ -367,3 +367,94 @@ def test_accept_encoding_q_zero_is_refusal(spark, tmp_path):
         assert gzip.decompress(body2) == raw
     finally:
         srv.shutdown()
+
+
+def _pmtiles_archive(spark, tile_df, path):
+    from versatiles_rs_spark.sources.pmtiles import write_pmtiles
+
+    write_pmtiles(tile_df, str(path), tile_type="bin")
+    return {(r.z, r.x, r.y): bytes(r.bytes) for r in tile_df.collect()}
+
+
+def test_config_container_mount_runs_no_spark_job(spark, tile_df, tmp_path):
+    """Structural pin: a .pmtiles mount answers tile GETs through its
+    point-lookup reader — 20 hits and misses, every body byte-equal to the
+    stored payload, and zero Spark jobs across the requests."""
+    from versatiles_rs_spark.server import serve_from_config
+
+    stored = _pmtiles_archive(spark, tile_df, tmp_path / "t.pmtiles")
+    (tmp_path / "s.yml").write_text("tiles:\n  - name: t\n    path: t.pmtiles\n")
+    hits = sorted(stored)
+    misses = [(3, 7, 7), (3, 0, 5), (4, 0, 0), (3, 8, 0), (32, 0, 0), (0, 1, 0)]
+    keys = (hits * 2)[:14] + misses
+    srv, base, skipped = serve_from_config(spark, str(tmp_path / "s.yml"))
+    tracker = spark.sparkContext.statusTracker()
+    try:
+        assert skipped == []
+        jobs_before = set(tracker.getJobIdsForGroup(None))
+        for z, x, y in keys:
+            if (z, x, y) in stored:
+                st, _, body = _get(f"{base}/tiles/t/{z}/{x}/{y}", {"Accept-Encoding": "identity"})
+                assert st == 200 and body == stored[(z, x, y)]
+            else:
+                with pytest.raises(urllib.error.HTTPError) as ei:
+                    _get(f"{base}/tiles/t/{z}/{x}/{y}")
+                assert ei.value.code == 404
+        # new ids, not a length difference: the status store evicts old
+        # jobs past spark.ui.retainedJobs, which would hide a new one
+        assert set(tracker.getJobIdsForGroup(None)) - jobs_before == set()
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
+def test_serve_cli_mounts_container(spark, tile_df, tmp_path):
+    """tools/serve.py on a bare .pmtiles file serves /tiles/z/x/y through
+    the container's point lookup (no Spark job per request)."""
+    from tools.serve import mount
+
+    stored = _pmtiles_archive(spark, tile_df, tmp_path / "t.pmtiles")
+    srv, base, skipped = mount(spark, str(tmp_path / "t.pmtiles"))
+    tracker = spark.sparkContext.statusTracker()
+    try:
+        assert skipped == []
+        jobs_before = set(tracker.getJobIdsForGroup(None))
+        for (z, x, y), want in stored.items():
+            st, hdrs, body = _get(f"{base}/tiles/{z}/{x}/{y}", {"Accept-Encoding": "identity"})
+            assert st == 200 and body == want
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            _get(f"{base}/tiles/3/7/7")
+        assert ei.value.code == 404
+        assert set(tracker.getJobIdsForGroup(None)) - jobs_before == set()
+        st, _, meta = _get(f"{base}/tiles.json")
+        assert json.loads(meta)["maxzoom"] == 3
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
+def test_container_lookups_over_http(spark, tile_df, tmp_path):
+    """The pmtiles and versatiles point lookups range-read http(s) mounts
+    exactly like local files."""
+    from versatiles_rs_spark.codecs import HAS_BROTLI
+    from versatiles_rs_spark.remote import start_range_server
+    from versatiles_rs_spark.sources.pmtiles import open_pmtiles_lookup
+    from versatiles_rs_spark.sources.versatiles import (
+        open_versatiles_lookup,
+        write_versatiles,
+    )
+
+    stored = _pmtiles_archive(spark, tile_df, tmp_path / "t.pmtiles")
+    opens = {"t.pmtiles": open_pmtiles_lookup}
+    if HAS_BROTLI:
+        write_versatiles(tile_df, str(tmp_path / "t.versatiles"), tile_type="bin")
+        opens["t.versatiles"] = open_versatiles_lookup
+    srv, base = start_range_server(str(tmp_path))
+    try:
+        for name, open_lookup in opens.items():
+            lookup = open_lookup(f"{base}/{name}")
+            assert {k: lookup(*k) for k in stored} == stored
+            assert lookup(3, 7, 7) is None
+    finally:
+        srv.shutdown()
+        srv.server_close()

@@ -64,3 +64,22 @@ def test_unique_index_rejects_duplicate_coords(spark, tiles, tmp_path):
     dup = tiles.unionByName(tiles.limit(1))
     with pytest.raises(sqlite3.IntegrityError):
         write_mbtiles(dup, str(tmp_path / "dup.mbtiles"))
+
+
+def test_lookup_parity_tms_flip(spark, tiles, tmp_path, check_lookup):
+    """open_mbtiles_lookup takes XYZ and flips y to TMS in its SELECT: every
+    tile of the scan comes back from the lookup at the same (z, x, y)."""
+    from versatiles_rs_spark.sources.mbtiles import open_mbtiles_lookup
+
+    path = str(tmp_path / "l.mbtiles")
+    write_mbtiles(tiles, path)
+    scan = {(r.z, r.x, r.y): bytes(r.bytes) for r in read_mbtiles(spark, path).collect()}
+    check_lookup(scan, open_mbtiles_lookup(path))
+
+
+def test_lookup_missing_file_fails_at_open(tmp_path):
+    from versatiles_rs_spark.sources.mbtiles import open_mbtiles_lookup
+
+    with pytest.raises(sqlite3.OperationalError):
+        open_mbtiles_lookup(str(tmp_path / "absent.mbtiles"))
+    assert not (tmp_path / "absent.mbtiles").exists()

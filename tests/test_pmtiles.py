@@ -273,3 +273,155 @@ def test_read_foreign_compression_enums(spark, tmp_path):
         for i, (z, x, y) in enumerate(zip(zs, xs, ys))
     }
     assert got == want
+
+
+# -- point lookup (open_pmtiles_lookup) against the scan reader -------------
+
+
+def _scan(spark, path):
+    return {(r.z, r.x, r.y): bytes(r.bytes) for r in read_pmtiles(spark, path).collect()}
+
+
+def _gz(b):
+    return gzip.compress(b, 6, mtime=0)
+
+
+def _raw_archive(path, root, tile_data, leaves=b"", internal="gzip", tile="none"):
+    """Hand-built spec-valid archive: `root` directory entries, already
+    encoded leaf-directory bytes and tile data, with the given compression
+    enums (the layouts foreign writers produce and ours does not)."""
+    from versatiles_rs_spark.sources.pmtiles import _COMPRESSION
+
+    pack = _gz if internal == "gzip" else bytes
+    root_b, meta = pack(serialize_entries(root)), pack(b"{}")
+    m0 = HEADER_LEN + len(root_b)
+    l0 = m0 + len(meta)
+    t0 = l0 + len(leaves)
+    hdr = b"PMTiles\x03" + struct.pack(
+        "<11Q", HEADER_LEN, len(root_b), m0, len(meta), l0, len(leaves), t0,
+        len(tile_data), 0, 0, 0,
+    )
+    hdr += bytes([1, _COMPRESSION[internal], _COMPRESSION[tile], 0, 0, 31]) + bytes(25)
+    assert len(hdr) == HEADER_LEN
+    with open(path, "wb") as f:
+        f.write(hdr + root_b + meta + leaves + tile_data)
+
+
+def test_lookup_parity_leaf_split(spark, tmp_path, check_lookup):
+    import numpy as np
+
+    from versatiles_rs_spark.sources.pmtiles import open_pmtiles_lookup
+
+    rng = np.random.default_rng(42)
+    rows = [
+        (10, x, y, bytes([x % 251, y % 251]) * (1 + int(rng.integers(0, 300))))
+        for x in range(200)
+        for y in range(150)
+    ]
+    path = str(tmp_path / "leaves.pmtiles")
+    write_pmtiles(spark.createDataFrame(rows, "z int, x long, y long, bytes binary"), path)
+    assert read_pmtiles_header(path)["leaf_dirs"][1] > 0
+    scan = _scan(spark, path)
+    assert len(scan) == len(rows)
+    check_lookup(scan, open_pmtiles_lookup(path))
+
+
+def test_lookup_parity_run_length(spark, tmp_path, check_lookup):
+    """One rl=3 entry addresses ids [5, 8); id 8 right after the run is a
+    miss, not the run's payload."""
+    from versatiles_rs_spark import tile_math as tm
+    from versatiles_rs_spark.sources.pmtiles import open_pmtiles_lookup
+
+    blob = b"\x89PNG-run-length-payload"
+    path = str(tmp_path / "rl.pmtiles")
+    _raw_archive(path, [(5, 0, len(blob), 3)], blob)
+    scan = _scan(spark, path)
+    assert len(scan) == 3
+    lookup = open_pmtiles_lookup(path)
+    check_lookup(scan, lookup)
+    z, x, y = (int(v) for v in tm.hilbert_decode(8))
+    assert lookup(z, x, y) is None
+
+
+def test_lookup_parity_dedup_rle(spark, tmp_path, check_lookup):
+    import numpy as np
+    import pandas as pd
+
+    from versatiles_rs_spark import tile_math as tm
+    from versatiles_rs_spark.sources.pmtiles import open_pmtiles_lookup
+
+    tids = np.arange(100, dtype=np.int64) + 1365
+    zs, xs, ys = tm.hilbert_decode(tids)
+    payloads = [b"\x89PNG-ocean" if (t // 10) % 2 == 0 else b"unique-%05d" % t for t in tids]
+    df = spark.createDataFrame(
+        pd.DataFrame({"z": zs, "x": xs, "y": ys, "bytes": payloads}),
+        schema="z int, x long, y long, bytes binary",
+    )
+    for dedup in (True, False):
+        path = str(tmp_path / f"d{int(dedup)}.pmtiles")
+        write_pmtiles(df, path, dedup=dedup)
+        scan = _scan(spark, path)
+        assert len(scan) == 100
+        check_lookup(scan, open_pmtiles_lookup(path))
+
+
+def test_lookup_parity_foreign_compression_enums(spark, tmp_path, check_lookup):
+    """Uncompressed directories, gzipped tiles: the lookup honours the
+    internal enum and returns tiles as stored, like the scan."""
+    from versatiles_rs_spark.sources.pmtiles import open_pmtiles_lookup
+
+    blobs = [_gz(b"raw-tile-payload-%d" % i) for i in range(3)]
+    offs = [0, len(blobs[0]), len(blobs[0]) + len(blobs[1])]
+    root = [(tid, off, len(b), 1) for tid, off, b in zip((5, 6, 9), offs, blobs)]
+    path = str(tmp_path / "foreign.pmtiles")
+    _raw_archive(path, root, b"".join(blobs), internal="none", tile="gzip")
+    scan = _scan(spark, path)
+    assert len(scan) == 3
+    check_lookup(scan, open_pmtiles_lookup(path))
+
+
+def test_lookup_parity_nested_leaves(spark, tmp_path, check_lookup):
+    """root -> leaf -> leaf: both readers follow rl=0 pointers inside leaf
+    directories; a run may cross a zoom boundary (ids 20..21)."""
+    from versatiles_rs_spark.sources.pmtiles import open_pmtiles_lookup
+
+    tiles = {1: b"a", 2: b"bb", 3: b"ccc", 10: b"dddd", 11: b"eeeee", 20: b"run"}
+    data, ents = b"", {}
+    for tid, blob in tiles.items():
+        ents[tid] = (tid, len(data), len(blob), 2 if tid == 20 else 1)
+        data += blob
+    inner1 = _gz(serialize_entries([ents[1], ents[2], ents[3]]))
+    inner2 = _gz(serialize_entries([ents[10], ents[11]]))
+    inner3 = _gz(serialize_entries([ents[20]]))
+    o2 = len(inner1)
+    o3 = o2 + len(inner2)
+    mid = _gz(serialize_entries([(1, 0, len(inner1), 0), (10, o2, len(inner2), 0)]))
+    om = o3 + len(inner3)
+    leaves = inner1 + inner2 + inner3 + mid
+    root = [(1, om, len(mid), 0), (20, o3, len(inner3), 0)]
+    path = str(tmp_path / "nested.pmtiles")
+    _raw_archive(path, root, data, leaves=leaves)
+    scan = _scan(spark, path)
+    assert len(scan) == 7  # ids 1, 2, 3, 10, 11 and the run 20, 21
+    check_lookup(scan, open_pmtiles_lookup(path))
+
+
+def test_lookup_rejects_cyclic_leaf_pointer(tmp_path):
+    """A leaf directory that points at itself is a malformed archive: the
+    lookup stops at the depth cap with an error instead of looping."""
+    from versatiles_rs_spark.sources.pmtiles import open_pmtiles_lookup
+
+    leaf = _gz(serialize_entries([(0, 0, 0, 0)]))
+    leaf = _gz(serialize_entries([(0, 0, len(leaf), 0)]))
+    assert deserialize_entries(gzip.decompress(leaf)) == [(0, 0, len(leaf), 0)]
+    path = str(tmp_path / "cyclic.pmtiles")
+    _raw_archive(path, [(0, 0, len(leaf), 0)], b"", leaves=leaf)
+    with pytest.raises(ValueError, match="nested deeper"):
+        open_pmtiles_lookup(path)(0, 0, 0)
+
+
+def test_aborted_write_leaves_no_file(spark, tiles, tmp_path):
+    path = tmp_path / "abort.pmtiles"
+    with pytest.raises(ValueError, match="duplicate tile id"):
+        write_pmtiles(tiles.unionByName(tiles.limit(1)), str(path))
+    assert not path.exists()

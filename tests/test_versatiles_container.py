@@ -124,3 +124,44 @@ def test_versatiles_gzip_payload_compression(spark, tmp_path):
     assert read_versatiles_header(p)["compression"] == "gzip"
     row = read_versatiles(spark, p).collect()[0]
     assert gzip.decompress(bytes(row.bytes)) == b"mvt-ish bytes"
+
+
+# -- point lookup (open_versatiles_lookup) against the scan reader ----------
+
+
+def _lookup_parity(spark, rows, check_lookup, tmp_path, **write_kw):
+    from versatiles_rs_spark.sources.versatiles import (
+        open_versatiles_lookup,
+        read_versatiles,
+        write_versatiles,
+    )
+
+    df = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["z", "x", "y", "bytes"]),
+        schema="z int, x long, y long, bytes binary",
+    )
+    p = str(tmp_path / "l.versatiles")
+    write_versatiles(df, p, **write_kw)
+    scan = {(r.z, r.x, r.y): bytes(r.bytes) for r in read_versatiles(spark, p).collect()}
+    assert len(scan) == len(rows)
+    check_lookup(scan, open_versatiles_lookup(p))
+
+
+def test_lookup_parity_roundtrip(spark, tmp_path, check_lookup):
+    """Multi-zoom, sparse blocks, tiles on both sides of a 256 block edge;
+    the holes inside a block's coverage bbox are length-0 slots (misses)."""
+    tiles = [(2, 1, 2), (5, 3, 7), (5, 4, 7), (9, 255, 258), (9, 300, 258), (9, 301, 260)]
+    rows = [(z, x, y, f"tile-{z}/{x}/{y}".encode()) for z, x, y in tiles]
+    _lookup_parity(spark, rows, check_lookup, tmp_path, tile_type="bin")
+
+
+def test_lookup_parity_small_blob_dedup(spark, tmp_path, check_lookup):
+    rows = [(3, x, 1, b"same-payload" * 10) for x in range(6)]
+    _lookup_parity(spark, rows, check_lookup, tmp_path, tile_type="bin")
+
+
+def test_lookup_parity_gzip_payloads(spark, tmp_path, check_lookup):
+    import gzip
+
+    rows = [(4, x, 3, gzip.compress(b"mvt-ish bytes %d" % x, mtime=0)) for x in (2, 5)]
+    _lookup_parity(spark, rows, check_lookup, tmp_path, tile_type="mvt", compression="gzip")

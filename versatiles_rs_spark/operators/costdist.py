@@ -158,12 +158,13 @@ def resolve_super_tiles(
         return s_max, False
     # smallest covering S wins: per-group work arrays are G x G whether or
     # not tiles occupy them, so a 2048px block over a 512px raster pays
-    # 16x the vector work for nothing
-    s = 1
-    while s <= s_max:
+    # 16x the vector work for nothing.  Powers of two first, then s_max
+    # itself: when s_max is not a power of two (tile_size=300 -> 6) an
+    # extent only an s_max block covers would otherwise miss the fast path
+    sizes = [1 << k for k in range(s_max.bit_length()) if 1 << k < s_max] + [s_max]
+    for s in sizes:
         if ext["x0"] // s == ext["x1"] // s and ext["y0"] // s == ext["y1"] // s:
             return s, True
-        s *= 2
     return s_max, False
 
 

@@ -24,9 +24,13 @@ class FileRangeReader:
         self.size = os.path.getsize(path)
 
     def read(self, offset: int, length: int) -> bytes:
-        with open(self.path, "rb") as f:
-            f.seek(offset)
-            return f.read(length)
+        # one positioned read per call: no shared file position, so
+        # concurrent readers (threaded serve lookups) need no lock
+        fd = os.open(self.path, os.O_RDONLY)
+        try:
+            return os.pread(fd, length, offset)
+        finally:
+            os.close(fd)
 
 
 class HttpRangeReader:

@@ -17,11 +17,16 @@ Content negotiation mirrors server/encoding.rs + optimize_compression: the
 response body is recompressed per the client's Accept-Encoding (brotli >
 gzip > identity) and labeled with Content-Encoding.
 
-Serving goes through `get_tile` point lookups on the tile DataFrame — on a
-Hilbert-sorted / block-grouped table the (z,x,y) predicate prunes to one
-file/row-group (sources/containers.py:82). For production QPS put the tiles
-behind the single-file containers instead; this shim is the functional
-`versatiles serve` analog for tests and local inspection.
+Every tile route resolves to one call, `body = lookup(z, x, y)`, bound at
+mount.  A single-file container (.pmtiles / .versatiles / .mbtiles) mounts
+its own point-lookup reader (`open_<fmt>_lookup`): the header and top-level
+index are parsed once, so a request walks the in-memory index and does one
+range read or indexed SELECT — no Spark job per request, the reference's
+reader.get_tile.  A DataFrame source (`serve_tiles`, a .vpl pipeline mount)
+is wrapped in the same callable shape and runs one `get_tile` Spark lookup
+per request; that path is the functional `versatiles serve` analog for
+tests and local inspection.  Snapshot-table mode keeps its own versioned
+(`?v=`) Spark lookup.
 """
 
 from __future__ import annotations
@@ -71,12 +76,12 @@ def _load_static(path: str) -> dict[str, bytes]:
 
 
 class TileHandler(BaseHTTPRequestHandler):
-    df = None
+    lookup = None  # staticmethod (z, x, y) -> bytes | None behind /tiles/z/x/y
     tilejson: dict = {}
     tile_fmt = "png"
-    tile_codec = "none"  # stored compression of self.df's tile payloads
+    tile_codec = "none"  # stored compression of the lookup's tile payloads
     static: dict[str, bytes] = {}
-    sources: dict = {}  # name -> (df, tilejson, codec, fmt) for config-driven multi-source
+    sources: dict = {}  # name -> (lookup, tilejson, codec, fmt) for config-driven multi-source
     snap = None  # SnapshotTable: versioned serving (merge-on-read + ?v= time travel)
     # Precomputed at mount time like the reference's add_api_to_app
     # (routes.rs:45-53) — never recomputed per request.
@@ -157,9 +162,16 @@ class TileHandler(BaseHTTPRequestHandler):
         self.end_headers()
         self.wfile.write(body)
 
-    def do_GET(self):
-        from .sources.containers import get_tile
+    def _send_tile(self, body: bytes | None, fmt: str, codec: str):
+        if body is None:
+            self.send_error(404, "tile not found")
+            return
+        # real MIME from the source's declared format — octet-stream would
+        # both mislabel tiles and defeat the image-incompressible skip
+        # (handlers.rs ok_data sets the true Content-Type)
+        self._send(body, _CTYPE.get(fmt, _CTYPE["bin"]), codec)
 
+    def do_GET(self):
         # liveness probe — tile_server.rs:198 routes /status to the literal
         # "ready!"; load balancers hit this before anything else
         if self.path == "/status":
@@ -187,46 +199,28 @@ class TileHandler(BaseHTTPRequestHandler):
                 except FileNotFoundError:
                     self.send_error(404, "no such snapshot version")
                     return
-                if row is None:
-                    self.send_error(404, "tile not found")
-                    return
-                self._send(bytes(row.bytes), _CTYPE.get(self.tile_fmt, _CTYPE["bin"]),
-                           self.tile_codec)
+                body = None if row is None else bytes(row.bytes)
+                self._send_tile(body, self.tile_fmt, self.tile_codec)
                 return
 
         # config mode: /tiles/{name}/{z}/{x}/{y} + /tiles/{name}/tiles.json
         m = re.match(r"^/tiles/(\w+)/(\d+)/(\d+)/(\d+)(?:\.\w+)?$", self.path)
         if m and m.group(1) in self.sources:
-            df, _, codec, fmt = self.sources[m.group(1)]
+            lookup, _, codec, fmt = self.sources[m.group(1)]
             z, x, y = int(m.group(2)), int(m.group(3)), int(m.group(4))
-            row = get_tile(df, z, x, y)
-            if row is None:
-                self.send_error(404, "tile not found")
-                return
-            # real MIME from the container's declared format — octet-stream
-            # would both mislabel tiles and defeat the image-incompressible
-            # skip (handlers.rs ok_data sets the true Content-Type)
-            self._send(bytes(row.bytes), _CTYPE.get(fmt, _CTYPE["bin"]), codec)
+            self._send_tile(lookup(z, x, y), fmt, codec)
             return
         m = re.match(r"^/tiles/(\w+)/tiles\.json$", self.path)
         if m and m.group(1) in self.sources:
             self._send(json.dumps(self.sources[m.group(1)][1]).encode(), "application/json")
             return
         m = _TILE_RE.match(self.path)
-        if m and self.df is not None:
+        if m and self.lookup is not None:
             z, x, y = map(int, m.groups())
-            row = get_tile(self.df, z, x, y)
-            if row is None:
-                self.send_error(404, "tile not found")
-                return
-            self._send(
-                bytes(row.bytes),
-                _CTYPE.get(self.tile_fmt, _CTYPE["bin"]),
-                self.tile_codec,
-            )
+            self._send_tile(self.lookup(z, x, y), self.tile_fmt, self.tile_codec)
             return
         if self.path in ("/tiles.json", "/tiles/tiles.json") and (
-            self.df is not None or self.snap is not None
+            self.lookup is not None or self.snap is not None
         ):
             self._send(json.dumps(self.tilejson).encode(), "application/json")
             return
@@ -255,6 +249,14 @@ def get_tile_snapshot(table, z: int, x: int, y: int, version: int | None = None)
     return rows[0] if rows else None
 
 
+def _start(name: str, attrs: dict, host: str, port: int):
+    """Bind a TileHandler subclass with `attrs` and serve it on a daemon
+    thread. Returns (server, url)."""
+    srv = ThreadingHTTPServer((host, port), type(name, (TileHandler,), attrs))
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    return srv, f"http://{host}:{srv.server_address[1]}"
+
+
 def serve_snapshot_tiles(
     spark,
     table_path: str,
@@ -273,9 +275,8 @@ def serve_snapshot_tiles(
     from .sources.containers import tilejson_for
 
     t = SnapshotTable(spark, table_path)
-    handler = type(
+    return _start(
         "SnapshotTileHandler",
-        (TileHandler,),
         {
             "snap": t,
             "tilejson": tilejson_for(t.read()),
@@ -283,11 +284,20 @@ def serve_snapshot_tiles(
             "tile_codec": tile_codec,
             "tiles_index_json": '["tiles"]',
         },
+        host,
+        port,
     )
-    srv = ThreadingHTTPServer((host, port), handler)
-    th = threading.Thread(target=srv.serve_forever, daemon=True)
-    th.start()
-    return srv, f"http://{host}:{srv.server_address[1]}"
+
+
+def _df_lookup(df):
+    """A tile DataFrame in the lookup shape: one Spark `get_tile` per call."""
+    from .sources.containers import get_tile
+
+    def lookup(z: int, x: int, y: int) -> bytes | None:
+        row = get_tile(df, z, x, y)
+        return None if row is None else bytes(row.bytes)
+
+    return lookup
 
 
 def serve_tiles(
@@ -304,22 +314,37 @@ def serve_tiles(
     mbtiles container) so negotiation recodes instead of double-compressing."""
     from .sources.containers import tilejson_for
 
-    handler = type(
+    return _start(
         "BoundTileHandler",
-        (TileHandler,),
         {
-            "df": df,
+            "lookup": staticmethod(_df_lookup(df)),
             "tilejson": tilejson_for(df),
             "tile_fmt": tile_fmt,
             "tile_codec": tile_codec,
             "static": _load_static(static_tar) if static_tar else {},
             "tiles_index_json": '["tiles"]',
         },
+        host,
+        port,
     )
-    srv = ThreadingHTTPServer((host, port), handler)
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
-    return srv, f"http://{host}:{srv.server_address[1]}"
+
+
+def serve_source(spark, path: str, host: str = "127.0.0.1", port: int = 0):
+    """Serve one container or .vpl file at /tiles/z/x/y through its mount
+    (see mount_tile_source). Returns (server, url)."""
+    lookup, tilejson, codec, fmt = mount_tile_source(spark, path)
+    return _start(
+        "SourceTileHandler",
+        {
+            "lookup": staticmethod(lookup),
+            "tilejson": tilejson,
+            "tile_fmt": fmt,
+            "tile_codec": codec,
+            "tiles_index_json": '["tiles"]',
+        },
+        host,
+        port,
+    )
 
 
 def _load_tile_source(spark, path: str):
@@ -356,6 +381,32 @@ def _load_tile_source(spark, path: str):
     raise ValueError(f"unsupported tile source {path!r}")
 
 
+def mount_tile_source(spark, path: str):
+    """Mount one container or .vpl file for serving. Returns (lookup,
+    tilejson, stored_tile_codec, tile_fmt). A container's lookup is its own
+    point-lookup reader, so requests run no Spark work; a .vpl pipeline's
+    is a `get_tile` over its DataFrame. The DataFrame also derives the
+    TileJSON, once, at mount."""
+    from .sources.containers import tilejson_for
+
+    df, codec, fmt = _load_tile_source(spark, path)
+    if path.endswith(".mbtiles"):
+        from .sources.mbtiles import open_mbtiles_lookup
+
+        lookup = open_mbtiles_lookup(path)
+    elif path.endswith(".pmtiles"):
+        from .sources.pmtiles import open_pmtiles_lookup
+
+        lookup = open_pmtiles_lookup(path)
+    elif path.endswith(".versatiles"):
+        from .sources.versatiles import open_versatiles_lookup
+
+        lookup = open_versatiles_lookup(path)
+    else:
+        lookup = _df_lookup(df)
+    return lookup, tilejson_for(df), codec, fmt
+
+
 def serve_from_config(spark, config_path: str, port: int = 0):
     """Start the shim from a reference-format server YAML (the layout of
     versatiles' own testdata/config1.yml): `server:` ip/port, `cors:`
@@ -367,8 +418,6 @@ def serve_from_config(spark, config_path: str, port: int = 0):
 
     import yaml
 
-    from .sources.containers import tilejson_for
-
     with open(config_path) as f:
         cfg = yaml.safe_load(f)
     base = os.path.dirname(os.path.abspath(config_path))
@@ -379,8 +428,7 @@ def serve_from_config(spark, config_path: str, port: int = 0):
     sources, skipped = {}, []
     for entry in cfg.get("tiles", []) or []:
         try:
-            df, codec, fmt = _load_tile_source(spark, resolve(entry["path"]))
-            sources[entry["name"]] = (df, tilejson_for(df), codec, fmt)
+            sources[entry["name"]] = mount_tile_source(spark, resolve(entry["path"]))
         except Exception as e:  # keep serving the healthy mounts
             skipped.append((entry["name"], str(e)[:200]))
 
@@ -394,11 +442,9 @@ def serve_from_config(spark, config_path: str, port: int = 0):
 
     server_cfg = cfg.get("server", {}) or {}
     cors = cfg.get("cors", {}) or {}
-    handler = type(
+    srv, url = _start(
         "ConfigTileHandler",
-        (TileHandler,),
         {
-            "df": None,
             "sources": sources,
             # mount-order ids, precomputed once (routes.rs:45-53); healthy
             # mounts only — a skipped source is absent from the index
@@ -408,9 +454,7 @@ def serve_from_config(spark, config_path: str, port: int = 0):
             "cors_origins": list(cors.get("allowed_origins", []) or []),
             "cors_max_age": int(cors.get("max_age_seconds", 0) or 0),
         },
+        str(server_cfg.get("ip", "127.0.0.1")),
+        port,
     )
-    host = str(server_cfg.get("ip", "127.0.0.1"))
-    srv = ThreadingHTTPServer((host, port), handler)
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
-    return srv, f"http://{host}:{srv.server_address[1]}", skipped
+    return srv, url, skipped

@@ -83,6 +83,36 @@ def read_mbtiles_metadata(path: str) -> dict:
         con.close()
 
 
+def open_mbtiles_lookup(path: str):
+    """Point-lookup reader: `lookup(z, x, y) -> bytes | None` with no Spark
+    work — one indexed SELECT on the unique (z, column, row) index, y
+    flipped to TMS.  Each calling thread gets its own read-only
+    connection (sqlite3 handles are not shared across threads)."""
+    import pathlib
+    import threading
+
+    from .. import tile_math as tm
+
+    uri = pathlib.Path(path).absolute().as_uri() + "?mode=ro"
+    sqlite3.connect(uri, uri=True).close()  # fail at mount on a missing file
+    local = threading.local()
+
+    def lookup(z: int, x: int, y: int) -> bytes | None:
+        if not tm.in_pyramid(z, x, y):
+            return None
+        con = getattr(local, "con", None)
+        if con is None:
+            con = local.con = sqlite3.connect(uri, uri=True)
+        row = con.execute(
+            "SELECT tile_data FROM tiles WHERE zoom_level = ? AND tile_column = ? "
+            "AND tile_row = ?",
+            (z, x, (1 << z) - 1 - y),
+        ).fetchone()
+        return bytes(row[0]) if row else None
+
+    return lookup
+
+
 def write_mbtiles(
     df: DataFrame, path: str, metadata: dict | None = None, payload: str = "bytes"
 ) -> int:

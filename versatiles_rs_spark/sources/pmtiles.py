@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import gzip
 import json
+import os
 import struct
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,6 +36,10 @@ ROOT_SPACE = 16384 - HEADER_LEN
 _COMPRESSION = {"none": 1, "gzip": 2, "brotli": 3}
 _TILE_TYPE = {"unknown": 0, "mvt": 1, "png": 2, "jpg": 3, "jpeg": 3, "webp": 4, "avif": 5}
 _TYPE_NAME = {v: k for k, v in _TILE_TYPE.items() if k != "jpeg"}
+# parsed leaf directories kept per open lookup reader
+_LEAF_CACHE_SIZE = 64
+# root plus nested leaf levels (the spec allows at most three)
+_MAX_DIR_DEPTH = 4
 
 
 def _write_varint(out: bytearray, v: int) -> None:
@@ -207,80 +212,87 @@ def write_pmtiles(
     n_contents = 0
     data_len = 0
     last_tid = -1
-    with open(path, "wb") as f:
-        f.seek(tile_data_off)
-        for row in ordered.toLocalIterator(prefetchPartitions=True):
-            tid = int(row["hilbert"])
-            if tid <= last_tid:  # strict-increasing ids (writer.rs:201-206)
-                raise ValueError(
-                    f"duplicate tile id {tid} — one payload per (z,x,y) required"
-                )
-            last_tid = tid
-            blob = bytes(row["_payload"])
-            ln = len(blob)
-            off = blob_off.get(blob) if dedup else None
-            if off is None:
-                off = data_len
-                f.write(blob)
-                data_len += ln
-                n_contents += 1
-                if dedup and len(blob_off) < max_dedup_blobs:
-                    blob_off[blob] = off
-            if (
-                dedup
-                and entries
-                and entries[-1][0] + entries[-1][3] == tid
-                and entries[-1][1] == off
-                and entries[-1][2] == ln
+    f = open(path, "wb")
+    try:
+        with f:
+            f.seek(tile_data_off)
+            for row in ordered.toLocalIterator(prefetchPartitions=True):
+                tid = int(row["hilbert"])
+                if tid <= last_tid:  # strict-increasing ids (writer.rs:201-206)
+                    raise ValueError(
+                        f"duplicate tile id {tid} — one payload per (z,x,y) required"
+                    )
+                last_tid = tid
+                blob = bytes(row["_payload"])
+                ln = len(blob)
+                off = blob_off.get(blob) if dedup else None
+                if off is None:
+                    off = data_len
+                    f.write(blob)
+                    data_len += ln
+                    n_contents += 1
+                    if dedup and len(blob_off) < max_dedup_blobs:
+                        blob_off[blob] = off
+                if (
+                    dedup
+                    and entries
+                    and entries[-1][0] + entries[-1][3] == tid
+                    and entries[-1][1] == off
+                    and entries[-1][2] == ln
+                ):
+                    entries[-1][3] += 1
+                else:
+                    entries.append([tid, off, ln, 1])
+
+            leaf_off = tile_data_off + data_len
+            ents = [tuple(e) for e in entries]
+            n_addressed = sum(e[3] for e in ents)
+            root_bytes, leaves_bytes = _build_directories(ents)
+            f.write(leaves_bytes)
+
+            header = bytearray()
+            header += b"PMTiles" + bytes([3])
+            for off, ln in (
+                (HEADER_LEN, len(root_bytes)),
+                (metadata_off, len(meta_blob)),
+                (leaf_off, len(leaves_bytes)),
+                (tile_data_off, data_len),
             ):
-                entries[-1][3] += 1
-            else:
-                entries.append([tid, off, ln, 1])
+                header += struct.pack("<QQ", off, ln)
+            header += struct.pack("<QQQ", n_addressed, len(ents), n_contents)
+            header += bytes(
+                [
+                    1,  # clustered (ids written in increasing order, contiguous data)
+                    _COMPRESSION["gzip"],  # internal compression
+                    _COMPRESSION["none"],  # tile compression (payloads stored raw)
+                    _TILE_TYPE.get(tile_type, 0),
+                    zs[0] if zs else 0,
+                    zs[-1] if zs else 0,
+                ]
+            )
+            header += struct.pack(
+                "<iiii",
+                int(min_lon * 1e7),
+                int(min_lat * 1e7),
+                int(max_lon * 1e7),
+                int(max_lat * 1e7),
+            )
+            header += bytes([zs[0] if zs else 0])
+            header += struct.pack(
+                "<ii", int((min_lon + max_lon) * 5e6), int((min_lat + max_lat) * 5e6)
+            )
+            assert len(header) == HEADER_LEN, len(header)
 
-        leaf_off = tile_data_off + data_len
-        ents = [tuple(e) for e in entries]
-        n_addressed = sum(e[3] for e in ents)
-        root_bytes, leaves_bytes = _build_directories(ents)
-        f.write(leaves_bytes)
-
-        header = bytearray()
-        header += b"PMTiles" + bytes([3])
-        for off, ln in (
-            (HEADER_LEN, len(root_bytes)),
-            (metadata_off, len(meta_blob)),
-            (leaf_off, len(leaves_bytes)),
-            (tile_data_off, data_len),
-        ):
-            header += struct.pack("<QQ", off, ln)
-        header += struct.pack("<QQQ", n_addressed, len(ents), n_contents)
-        header += bytes(
-            [
-                1,  # clustered (ids written in increasing order, contiguous data)
-                _COMPRESSION["gzip"],  # internal compression
-                _COMPRESSION["none"],  # tile compression (payloads stored raw)
-                _TILE_TYPE.get(tile_type, 0),
-                zs[0] if zs else 0,
-                zs[-1] if zs else 0,
-            ]
-        )
-        header += struct.pack(
-            "<iiii",
-            int(min_lon * 1e7),
-            int(min_lat * 1e7),
-            int(max_lon * 1e7),
-            int(max_lat * 1e7),
-        )
-        header += bytes([zs[0] if zs else 0])
-        header += struct.pack(
-            "<ii", int((min_lon + max_lon) * 5e6), int((min_lat + max_lat) * 5e6)
-        )
-        assert len(header) == HEADER_LEN, len(header)
-
-        f.seek(0)
-        f.write(header)
-        f.write(root_bytes)
-        f.write(b"\x00" * (16384 - HEADER_LEN - len(root_bytes)))
-        f.write(meta_blob)
+            f.seek(0)
+            f.write(header)
+            f.write(root_bytes)
+            f.write(b"\x00" * (16384 - HEADER_LEN - len(root_bytes)))
+            f.write(meta_blob)
+    except BaseException:
+        # an aborted export (duplicate id, failed job, interrupt) must
+        # not leave a partial archive that looks like a real one
+        os.remove(path)
+        raise
     return n_addressed
 
 
@@ -367,18 +379,23 @@ def read_pmtiles(spark: SparkSession, path: str) -> DataFrame:
                 {"z": zs.astype("int32"), "x": xs, "y": ys, "bytes": blobs}
             )
 
+        def leaf_batches(off, ln):
+            """One batch per leaf directory; nested leaf pointers recurse."""
+            leaf = deserialize_entries(
+                _decompress_section(rdr.read(leaf0 + int(off), int(ln)), internal_c, "internal")
+            )
+            yield emit([e for e in leaf if e[3]])
+            for _, off2, ln2, rl in leaf:
+                if rl == 0:
+                    yield from leaf_batches(off2, ln2)
+
         for pdf in batches:
             direct = []
             for tid, off, ln, rl in zip(pdf["tid"], pdf["off"], pdf["ln"], pdf["rl"]):
                 if int(rl) == 0:  # leaf pointer: parse the leaf here
-                    leaf = deserialize_entries(
-                        _decompress_section(
-                            rdr.read(leaf0 + int(off), int(ln)), internal_c, "internal"
-                        )
-                    )
-                    out = emit(leaf)
-                    if out is not None:
-                        yield out
+                    for out in leaf_batches(off, ln):
+                        if out is not None:
+                            yield out
                 else:
                     direct.append((tid, off, ln, rl))
             out = emit(direct)
@@ -390,6 +407,57 @@ def read_pmtiles(spark: SparkSession, path: str) -> DataFrame:
         .repartitionByRange(n_parts, "tid")
         .mapInPandas(gen, schema="z int, x long, y long, bytes binary")
     )
+
+
+def open_pmtiles_lookup(path: str):
+    """Point-lookup reader: `lookup(z, x, y) -> bytes | None` with no Spark
+    work — the serve path's reader.get_tile.  Header and root directory
+    are parsed once here; a lookup bisects the directory entries on the
+    Hilbert id, follows leaf pointers (rl == 0, nested leaves included)
+    through a bounded LRU of parsed leaves, and does one range read of the
+    tile.  `path` may be an http(s):// URL.  Safe to call from many
+    threads at once."""
+    import bisect
+    import functools
+
+    from .. import tile_math as tm
+    from ..remote import open_range_reader
+
+    rd = open_range_reader(path)
+    h = parse_pmtiles_header(rd.read(0, HEADER_LEN))
+    internal_c = int(h["internal_compression"])
+    leaf0 = int(h["leaf_dirs"][0])
+    data0 = int(h["tile_data"][0])
+
+    def parse(buf: bytes):
+        entries = deserialize_entries(_decompress_section(buf, internal_c, "internal"))
+        return [e[0] for e in entries], entries
+
+    root = parse(rd.read(*h["root_dir"]))
+
+    @functools.lru_cache(maxsize=_LEAF_CACHE_SIZE)
+    def leaf(off: int, ln: int):
+        return parse(rd.read(leaf0 + off, ln))
+
+    def lookup(z: int, x: int, y: int) -> bytes | None:
+        if not tm.in_pyramid(z, x, y):
+            return None
+        tid = int(tm.hilbert_index(z, x, y))
+        ids, entries = root
+        for _ in range(_MAX_DIR_DEPTH):
+            i = bisect.bisect_right(ids, tid) - 1
+            if i < 0:
+                return None
+            first, off, ln, rl = entries[i]
+            if rl == 0:  # leaf pointer covering [first, next entry's id)
+                ids, entries = leaf(off, ln)
+            elif tid < first + rl:  # run: [first, first + rl) share one blob
+                return rd.read(data0 + off, ln)
+            else:
+                return None
+        raise ValueError(f"PMTiles leaf directories nested deeper than {_MAX_DIR_DEPTH}")
+
+    return lookup
 
 
 _COMP_NAME = {v: k for k, v in _COMPRESSION.items()}

@@ -45,6 +45,8 @@ _COMP_NAME = {0: "none", 1: "gzip", 2: "brotli"}
 
 # writer.rs dedups blobs smaller than this via a content-hash lookup
 _DEDUP_MAX = 1000
+# decoded per-block tile indices kept per open lookup reader
+_TILE_INDEX_CACHE_SIZE = 64
 
 
 def _header_blob(fmt: str, compression: str, zooms, bbox, meta_range, blocks_range) -> bytes:
@@ -278,6 +280,50 @@ def read_versatiles(spark: SparkSession, path: str) -> DataFrame:
         .repartitionByRange(n_parts, "i")
         .mapInPandas(gen, schema="z int, x long, y long, bytes binary")
     )
+
+
+def open_versatiles_lookup(path: str):
+    """Point-lookup reader: `lookup(z, x, y) -> bytes | None` with no Spark
+    work (reader.rs get_tile flow).  The block index is decoded once into
+    a dict keyed by (z, x >> 8, y >> 8); each block's brotli tile index is
+    decoded on first use and kept in a bounded LRU; the tile is one range
+    read from its 12-byte (offset, length) slot, where length 0 is a miss.
+    `path` may be an http(s):// URL.  Safe to call from many threads at
+    once."""
+    import functools
+
+    from .. import tile_math as tm
+    from ..remote import open_range_reader
+
+    rd = open_range_reader(path)
+    h = parse_versatiles_header(rd.read(0, HEADER_LEN))
+    bindex = decompress_blob(rd.read(*h["blocks_range"]), "brotli")
+    blocks = {
+        (z, bx, by): tuple(rest)
+        for z, bx, by, *rest in struct.iter_unpack(">BIIBBBBQQI", bindex)
+    }
+
+    @functools.lru_cache(maxsize=_TILE_INDEX_CACHE_SIZE)
+    def tile_index(key) -> bytes:
+        *_, tiles_off, tiles_len, idx_len = blocks[key]
+        return decompress_blob(rd.read(tiles_off + tiles_len, idx_len), "brotli")
+
+    def lookup(z: int, x: int, y: int) -> bytes | None:
+        if not tm.in_pyramid(z, x, y):
+            return None
+        key = (z, x >> 8, y >> 8)
+        block = blocks.get(key)
+        if block is None:
+            return None
+        x0, y0, x1, y1, tiles_off, _, _ = block
+        cx, cy = x & 255, y & 255
+        if not (x0 <= cx <= x1 and y0 <= cy <= y1):
+            return None
+        i = (cy - y0) * (x1 - x0 + 1) + (cx - x0)
+        off, ln = struct.unpack_from(">QI", tile_index(key), i * 12)
+        return rd.read(tiles_off + off, ln) if ln else None
+
+    return lookup
 
 
 def read_versatiles_metadata(path: str) -> dict:

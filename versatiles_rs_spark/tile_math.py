@@ -142,6 +142,13 @@ def bbox_include(a, b):
 # coordinate transforms
 # ---------------------------------------------------------------------------
 
+def in_pyramid(z: int, x: int, y: int) -> bool:
+    """Scalar guard: (z, x, y) is a real tile (0 <= z <= 31, 0 <= x, y < 2^z).
+    Point lookups check it first — out-of-range input would otherwise
+    overflow hilbert_index into another tile's id."""
+    return 0 <= z <= MAX_ZOOM and 0 <= x < (1 << z) and 0 <= y < (1 << z)
+
+
 def flip_y(z, y) -> np.ndarray:
     """TMS <-> XYZ: y -> 2^z - 1 - y (tile_coord.rs:179-181)."""
     return (np.int64(1) << _as_i64(z)) - 1 - _as_i64(y)
@@ -203,7 +210,11 @@ def hilbert_index(z, x, y) -> np.ndarray:
 
     Golden: (1,1,1)->3, (2,2,2)->13, (5,3,3)->73, (7,7,3)->63,
     (0,0,31)->1537228672809129301, (2^31-1,2^31-1,31)->4611686018427387903.
+    A single in-range coordinate (a serve-path point lookup) takes a plain
+    int loop: the array loop costs ~0.3 ms per call in numpy overhead.
     """
+    if np.ndim(z) == np.ndim(x) == np.ndim(y) == 0 and 0 <= z <= MAX_ZOOM:
+        return np.array(_hilbert_scalar(int(z), int(x), int(y)), dtype=np.int64)
     z = _as_i64(z)
     tx = _as_i64(x).copy()
     ty = _as_i64(y).copy()
@@ -226,6 +237,21 @@ def hilbert_index(z, x, y) -> np.ndarray:
         tx2 = np.where(do_rot, ty, tx)
         ty2 = np.where(do_rot, tx, ty)
         tx, ty = tx2, ty2
+    return d
+
+
+def _hilbert_scalar(z: int, tx: int, ty: int) -> int:
+    """hilbert_index's loop on one coordinate, in Python ints."""
+    d = ((1 << (2 * z)) - 1) // 3
+    for bit in range(z - 1, -1, -1):
+        s = 1 << bit
+        rx = 1 if tx & s else 0
+        ry = 1 if ty & s else 0
+        d += s * s * ((3 * rx) ^ ry)
+        if ry == 0:
+            if rx == 1:
+                tx, ty = s - 1 - tx, s - 1 - ty
+            tx, ty = ty, tx
     return d
 
 

@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -19,6 +20,29 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def force_distributed(monkeypatch):
+    """Context manager: inside it every guard.collect_small probe reports
+    an over-limit relation, so guarded operators take their distributed
+    branch (or raise, where they have none).  It yields the names of the
+    functions whose probe it refused, in call order."""
+    from versatiles_rs_spark import guard
+
+    @contextlib.contextmanager
+    def forced():
+        refused: list[str] = []
+
+        def over_limit(df, max_rows):
+            refused.append(sys._getframe(1).f_code.co_name)
+            return None
+
+        with monkeypatch.context() as m:
+            m.setattr(guard, "collect_small", over_limit)
+            yield refused
+
+    return forced
 
 
 def _check_lookup(scan: dict, lookup) -> None:

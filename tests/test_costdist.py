@@ -5,6 +5,7 @@ as one grid — an independent implementation (no vectorized buckets, no
 super-tiles).  The distributed round solve must match it bit for bit
 across super-tile splits, blocked walls, unreachable pockets and
 multi-super-tile sources."""
+import contextlib
 import heapq
 
 import numpy as np
@@ -220,10 +221,15 @@ def scalar_backtrace(cost, dist_grid, sources, target):
         x, y = nxt
 
 
-@pytest.mark.parametrize("seed,s,solve", [(81, 1, "driver"), (82, 2, "doubling"), (81, 2, "doubling")])
-def test_fuzz_least_cost_path(spark, seed, s, solve):
+@pytest.mark.parametrize(
+    "seed,s,forced",
+    [(81, 1, False), (82, 2, True), (81, 2, True)],
+    ids=["81-1-driver", "82-2-doubling", "81-2-doubling"],
+)
+def test_fuzz_least_cost_path(spark, seed, s, forced, force_distributed):
     """Path backtrace == scalar predecessor walk on random rasters, for
-    reachable and unreachable targets, across super-tile splits."""
+    reachable and unreachable targets, across super-tile splits — by the
+    driver walk, and by pointer doubling when forced past the guard."""
     from versatiles_rs_spark.operators.costdist import least_cost_path
 
     n, ts = 64, 16
@@ -244,11 +250,11 @@ def test_fuzz_least_cost_path(spark, seed, s, solve):
         if cost[y, x] >= 0 and (x, y) not in tgts:
             tgts.append((x, y))
     m: dict = {}
-    pdf = least_cost_path(
-        dem_to_tiles(spark, raster.astype(np.int64), ts),
-        srcs, tgts, tile_size=ts, super_tiles=s, blocked=255, solve=solve,
-        metrics=m,
-    ).toPandas()
+    with force_distributed() if forced else contextlib.nullcontext():
+        pdf = least_cost_path(
+            dem_to_tiles(spark, raster.astype(np.int64), ts),
+            srcs, tgts, tile_size=ts, super_tiles=s, blocked=255, metrics=m,
+        ).toPandas()
     got = {
         tid: sorted(
             (int(r.gx), int(r.gy), int(r.dist))
@@ -261,7 +267,7 @@ def test_fuzz_least_cost_path(spark, seed, s, solve):
             (x, y, d) for x, y, d in scalar_backtrace(cost, dist_grid, srcs, t)
         )
         assert got.get(i, []) == want, f"target {i}"
-    assert m["walk_rounds"] >= (1 if solve == "doubling" else 0)
+    assert m["walk_rounds"] >= (1 if forced else 0)
 
 
 def test_auto_super_tiles_tries_non_power_of_two_cap(spark):

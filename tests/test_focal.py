@@ -870,9 +870,9 @@ def test_sharpness_blur_law():
     assert sharp >= 0 and var_num(blur) >= 0
 
 
-def test_d8_basins_driver_matches_relational(spark):
+def test_d8_basins_driver_matches_relational(spark, force_distributed):
     """The guarded driver doubling (default) and the forced relational
-    rounds (driver_max_rows=0) are bit-identical — same schedule, same
+    rounds (force_distributed) are bit-identical — same schedule, same
     off-raster freeze — in both fixed-rounds and fixpoint modes."""
     pixels = focal_terrain_pixels(
         fixtures.dem_raster_df(spark, zoom=0, partitions=1)
@@ -881,9 +881,9 @@ def test_d8_basins_driver_matches_relational(spark):
         succ = d8_successors(pixels)
         for rounds in (6, None):
             drv = sorted(map(tuple, d8_basins(succ, rounds=rounds).collect()))
-            rel = sorted(
-                map(tuple, d8_basins(succ, rounds=rounds, driver_max_rows=0).collect())
-            )
+            with force_distributed() as refused:
+                rel = sorted(map(tuple, d8_basins(succ, rounds=rounds).collect()))
+            assert refused == ["d8_basins"]
             assert drv == rel
     finally:
         pixels.unpersist()

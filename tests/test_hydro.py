@@ -97,16 +97,16 @@ def ramp_tiles_df(spark, n: int, ts: int):
     return spark.createDataFrame(rows, "x long, y long, bytes binary")
 
 
-def test_flow_accumulation_multihop_ramp(spark):
+def test_flow_accumulation_multihop_ramp(spark, force_distributed):
     """On the eastward ramp, acc(gx, gy) == gx exactly (the whole row
     upstream plus self), and the Jacobi relaxation needs >= 2 rounds —
     flow at gx=62 accumulated across three super-tile crossings."""
     n, ts = 64, 16
     m: dict = {}
-    pdf = flow_accumulation(
-        ramp_tiles_df(spark, n, ts), tile_size=ts, super_tiles=1, metrics=m,
-        driver_max_coarse=0,  # force the relational rounds this test pins
-    ).toPandas()
+    with force_distributed():  # the relational rounds this test pins
+        pdf = flow_accumulation(
+            ramp_tiles_df(spark, n, ts), tile_size=ts, super_tiles=1, metrics=m,
+        ).toPandas()
     assert len(pdf) == (n - 2) * (n - 2)
     assert (pdf["acc"].to_numpy() == pdf["gx"].to_numpy()).all()
     assert m["coarse_rounds"] >= 2
@@ -136,22 +136,22 @@ def test_flow_accumulation_max_semiring(spark, s):
     np.testing.assert_array_equal(as_grid(pdf, exp.shape), exp * valid)
 
 
-def test_flow_accumulation_max_multihop_ramp(spark):
+def test_flow_accumulation_max_multihop_ramp(spark, force_distributed):
     """Max mode on the eastward ramp: elevation is n-1-gx, every cell
     flows east, so the upstream peak at every (gx, gy) is the westmost
     universe cell's elevation n-2 — a value that must survive 3
     super-tile crossings and >= 2 coarse max-relaxation rounds."""
     n, ts = 64, 16
     m: dict = {}
-    pdf = flow_accumulation(
-        ramp_tiles_df(spark, n, ts),
-        tile_size=ts,
-        super_tiles=1,
-        metrics=m,
-        weight_fn=lambda e: e,
-        combine="max",
-        driver_max_coarse=0,  # force the relational rounds this test pins
-    ).toPandas()
+    with force_distributed():  # the relational rounds this test pins
+        pdf = flow_accumulation(
+            ramp_tiles_df(spark, n, ts),
+            tile_size=ts,
+            super_tiles=1,
+            metrics=m,
+            weight_fn=lambda e: e,
+            combine="max",
+        ).toPandas()
     assert len(pdf) == (n - 2) * (n - 2)
     assert (pdf["acc"].to_numpy() == n - 2).all()
     assert m["coarse_rounds"] >= 2
@@ -233,7 +233,7 @@ def tree_strahler(k: int, mod: int, h: int = 2654435761) -> dict[int, int]:
     return order
 
 
-def test_strahler_order_heap_tree(spark):
+def test_strahler_order_heap_tree(spark, force_distributed):
     """Deep junction nesting: the hash-pruned heap tree reaches order 9+
     — distributed segment contraction == sequential heap evaluation,
     and the junction relaxation needs multiple rounds."""
@@ -257,7 +257,9 @@ def test_strahler_order_heap_tree(spark):
     assert m["solve"] == "driver" and m["n_junctions"] > 100
     # distributed Jacobi fallback must agree exactly
     m2: dict = {}
-    pdf2 = strahler_order(universe, streams, metrics=m2, solve="relax").toPandas()
+    with force_distributed() as refused:
+        pdf2 = strahler_order(universe, streams, metrics=m2).toPandas()
+    assert refused == ["d8_basins", "strahler_order"]
     got2 = dict(zip(pdf2["id"].astype(int), pdf2["strahler"].astype(int)))
     assert got2 == exp
     assert m2["solve"] == "relax" and m2["strahler_rounds"] >= 3
@@ -441,6 +443,19 @@ def test_fill_depressions_super_tile_degenerate(spark):
     got = np.zeros_like(exp)
     got[pdf["gy"].to_numpy(), pdf["gx"].to_numpy()] = pdf["filled"].to_numpy()
     np.testing.assert_array_equal(got, exp)
+
+
+def test_fill_depressions_over_guard_raises(spark, force_distributed):
+    """fill_depressions has no distributed spill solve (one-hop rounds
+    are the wrong shape, see the operator): a watershed graph over the
+    guard raises and points at super_tiles instead of collecting it."""
+    from versatiles_rs_spark.fixtures import dem_bowls_raster_df
+    from versatiles_rs_spark.operators.hydro import fill_depressions
+
+    with force_distributed() as refused:
+        with pytest.raises(ValueError, match="raise super_tiles"):
+            fill_depressions(dem_bowls_raster_df(spark, partitions=4), super_tiles=2)
+    assert refused == ["fill_depressions"]
 
 
 def test_hand_matches_numpy_first_contact(spark):
@@ -788,17 +803,17 @@ def test_wetness_index_matches_global(spark):
     assert (got["twi_q"].to_numpy() != 9999).any()
 
 
-def test_flow_accumulation_driver_coarse_matches_relational(spark):
+def test_flow_accumulation_driver_coarse_matches_relational(spark, force_distributed):
     """The guarded driver Kahn accumulation over the coarse border graph
     (default) equals the forced relational relaxation rounds
-    (driver_max_coarse=0) — multi-hop ramp so the coarse solve is real."""
+    (force_distributed) — multi-hop ramp so the coarse solve is real."""
     n, ts = 512, 128
     tiles = ramp_tiles_df(spark, n, ts).cache()
     try:
         drv = flow_accumulation(tiles, tile_size=ts, super_tiles=1).toPandas()
-        rel = flow_accumulation(
-            tiles, tile_size=ts, super_tiles=1, driver_max_coarse=0
-        ).toPandas()
+        with force_distributed() as refused:
+            rel = flow_accumulation(tiles, tile_size=ts, super_tiles=1).toPandas()
+        assert refused == ["flow_accumulation"]
         a = drv.sort_values(["gx", "gy"]).reset_index(drop=True)
         b = rel.sort_values(["gx", "gy"]).reset_index(drop=True)
         assert a.equals(b)

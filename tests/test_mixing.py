@@ -47,16 +47,11 @@ def test_mixture_sample_composition(spark):
     assert a == b
 
 
-def test_mixture_sample_domain_guard(spark):
-    import versatiles_rs_spark.functions.mixing as mx
-
+def test_mixture_sample_domain_guard(spark, force_distributed):
     df = spark.range(10).select(
         F.col("id"), F.col("id").cast("string").alias("domain")
     )
-    old = mx._MAX_DOMAINS
-    mx._MAX_DOMAINS = 5
-    try:
+    with force_distributed() as refused:
         with pytest.raises(ValueError, match="domains"):
             mixture_sample(df, "domain", {"1": 1.0}, key_col="id")
-    finally:
-        mx._MAX_DOMAINS = old
+    assert refused == ["mixture_sample"]

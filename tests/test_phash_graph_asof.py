@@ -141,7 +141,7 @@ def _union_find(edges):
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
-def test_cc_matches_union_find_random(spark, seed):
+def test_cc_matches_union_find_random(spark, seed, force_distributed):
     rng = np.random.RandomState(seed)
     n_nodes, n_edges = 200, 150
     edges = [
@@ -153,20 +153,20 @@ def test_cc_matches_union_find_random(spark, seed):
     got = {r.id: r.component for r in connected_components(df).collect()}
     assert got == _union_find(edges)
     # distributed star rounds must agree with the guarded driver solve
-    star = {
-        r.id: r.component
-        for r in connected_components(df, driver_max_edges=0).collect()
-    }
+    with force_distributed() as refused:
+        star = {r.id: r.component for r in connected_components(df).collect()}
+    assert refused == ["connected_components"]
     assert star == got
 
 
-def test_cc_chain_converges_logarithmically(spark):
+def test_cc_chain_converges_logarithmically(spark, force_distributed):
     # 1023-node path graph: naive min-propagation needs ~1022 rounds;
     # large-star/small-star must finish in O(log n)
     edges = [(i, i + 1) for i in range(1022)]
     df = spark.createDataFrame(pd.DataFrame(edges, columns=["id_a", "id_b"]))
     metrics = {}
-    got = connected_components(df, metrics=metrics, driver_max_edges=0)
+    with force_distributed():
+        got = connected_components(df, metrics=metrics)
     assert got.filter(F.col("component") != 0).count() == 0
     assert got.count() == 1023
     assert 0 < metrics["cc_rounds"] <= 12, metrics

@@ -4,12 +4,10 @@ dense grid, 4-connectivity, label = min packed cell id."""
 from collections import deque
 
 import numpy as np
+import pandas as pd
 
-from versatiles_rs_spark.operators.regions import (
-    _driver_union_find,
-    region_group,
-    region_segments,
-)
+from versatiles_rs_spark.functions.graph import _driver_union_find
+from versatiles_rs_spark.operators.regions import region_group, region_segments
 
 
 def flood_fill(grid: np.ndarray):
@@ -85,20 +83,21 @@ def test_region_group_snake_and_uniform(spark):
     assert got == flood_fill(grid)
 
 
-def test_region_group_distributed_cc_fallback(spark):
-    """max_driver_edges=0 forces the large/small-star path: labels must
-    be identical to the driver union-find path."""
+def test_region_group_distributed_cc_fallback(spark, force_distributed):
+    """Past connected_components' guard the large/small-star rounds run:
+    labels must be identical to the driver union-find path."""
     rng = np.random.default_rng(23)
     grid = rng.integers(0, 2, size=(12, 12))
     fast = collect_regions(region_group(grid_df(spark, grid), 12))
-    slow = collect_regions(
-        region_group(grid_df(spark, grid), 12, max_driver_edges=0)
-    )
+    with force_distributed() as refused:
+        slow = collect_regions(region_group(grid_df(spark, grid), 12))
+    assert refused == ["connected_components"]
     assert fast == slow == flood_fill(grid)
 
 
 def test_driver_union_find_min_roots():
-    roots = _driver_union_find([(5, 9), (9, 2), (7, 8)])
+    got = _driver_union_find(pd.DataFrame({"u": [5, 9, 7], "v": [9, 2, 8]}))
+    roots = dict(zip(got["id"].tolist(), got["component"].tolist()))
     assert roots[5] == roots[9] == roots[2] == 2
     assert roots[7] == roots[8] == 7
 

@@ -142,28 +142,6 @@ def images_df(spark: SparkSession, n: int, size: int = 64, partitions: int = 32)
     return base.mapInPandas(gen, schema=IMAGES_SCHEMA)
 
 
-def with_coords(df: DataFrame, zoom: int = 12, skew: bool = True) -> DataFrame:
-    """Attach derived lon/lat (+ optional hot-cell skew) and (z,x,y)."""
-    import pandas as pd  # noqa: F811
-
-    from .udfs import with_tile_columns
-
-    def derive(batches):
-        for pdf in batches:
-            ph = pdf["phash"].to_numpy()
-            i = pdf["image_id"].str.slice(3).astype(np.int64).to_numpy()
-            hot = (i % 5 == 0) if skew else None
-            lon, lat = phash_to_lonlat(ph, hot)
-            pdf = pdf.assign(lon=lon, lat=lat)
-            yield pdf
-
-    from .udfs import schema_with
-
-    schema = schema_with(df.schema, ("lon", "double"), ("lat", "double"))
-    out = df.mapInPandas(derive, schema=schema)
-    return with_tile_columns(out, "lon", "lat", zoom=zoom)
-
-
 def images_with_tiles_df(
     spark: SparkSession,
     n: int,
@@ -778,12 +756,6 @@ def parent_rgb_raster_df(
         .repartition(partitions)
         .mapInPandas(gen, schema="z int, x long, y long, bytes binary, fmt string")
     )
-
-
-def blob_pattern_sql(id_expr: str) -> str:
-    """DuckDB replay of the recompress fixture payload text."""
-    i = f"({id_expr})"
-    return f"repeat('payload-' || {i} || '-seg;', 30 + {i} % 17)"
 
 
 def blob_codec_df(spark: SparkSession, n: int = 240, partitions: int = 4) -> DataFrame:

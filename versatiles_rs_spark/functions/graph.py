@@ -27,6 +27,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import guard
+
+_DRIVER_MAX_EDGES = 2_000_000  # deduplicated edges solved by driver union-find
+
 
 def _edge_signature(edges: DataFrame) -> tuple:
     """Order-insensitive multiset signature of the edge set: equal signatures
@@ -112,7 +116,6 @@ def connected_components(
     dst: str = "id_b",
     max_iter: int = 40,
     metrics: dict | None = None,
-    driver_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """(id, component) for every id appearing in `pairs`; component is the
     minimum id reachable in the undirected pair graph. Isolated ids (no
@@ -123,30 +126,27 @@ def connected_components(
     Small contracted graphs take a guarded driver solve: each star round
     costs ~4 fixed Spark jobs REGARDLESS of edge count (the
     iterative-relational-overhead lesson), so when the deduplicated edge
-    list is at most `driver_max_edges` (2M default ~ 32 MB of longs — the
-    same bounded-collect pattern as fill_depressions' max_coarse_edges),
-    a sequential union-find replaces ~5 rounds x 4 jobs with one count +
-    one collect, producing the identical (id, min-id component) relation.
-    The distributed large/small-star rounds remain the path that engages
-    at corpus scale, where contracted similarity graphs exceed any
-    driver; pass driver_max_edges=0 to force them.
+    list is at most _DRIVER_MAX_EDGES (2M ~ 32 MB of longs; probed by
+    guard.collect_small), a sequential union-find replaces ~5 rounds x 4
+    jobs with one job, producing the identical (id, min-id component)
+    relation.  The distributed large/small-star rounds remain the path
+    that engages at corpus scale, where contracted similarity graphs
+    exceed any driver; tests force them with the force_distributed
+    fixture.
     """
     edges_lazy = (
         pairs.select(F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .dropDuplicates(["u", "v"])
     )
-    if driver_max_edges:
-        # guard + collect in ONE job (the limit-probe pattern): a short
-        # result IS the edge list; overflow falls through to star rounds
-        pdf = edges_lazy.limit(int(driver_max_edges) + 1).toPandas()
-        if len(pdf) <= driver_max_edges:
-            if metrics is not None:
-                metrics["cc_rounds"] = 0
-                metrics["cc_driver_edges"] = len(pdf)
-            return pairs.sparkSession.createDataFrame(
-                _driver_union_find(pdf), schema="id long, component long"
-            )
+    pdf = guard.collect_small(edges_lazy, _DRIVER_MAX_EDGES)
+    if pdf is not None:
+        if metrics is not None:
+            metrics["cc_rounds"] = 0
+            metrics["cc_driver_edges"] = len(pdf)
+        return pairs.sparkSession.createDataFrame(
+            _driver_union_find(pdf), schema="id long, component long"
+        )
     edges = edges_lazy.localCheckpoint()
     prev_sig = None
     for rounds in range(1, max_iter + 1):

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import guard
 from .sessions import _SAMPLE_ADD, _SAMPLE_MOD, _SAMPLE_MULT
 
 _MAX_DOMAINS = 100_000  # driver collect guard: counts are a few ints/domain
@@ -61,12 +62,12 @@ def mixture_sample(
 ) -> DataFrame:
     """Downsample `df` so the output's `domain_col` composition matches
     `targets` (normalized), at the largest size needing no upsampling."""
-    cnt_rows = df.groupBy(domain_col).count().limit(_MAX_DOMAINS + 1).collect()
-    if len(cnt_rows) > _MAX_DOMAINS:
+    cnt = guard.collect_small(df.groupBy(domain_col).count(), _MAX_DOMAINS)
+    if cnt is None:
         raise ValueError(
             f"mixture_sample: >{_MAX_DOMAINS} domains — aggregate upstream first"
         )
-    counts = {r[domain_col]: r["count"] for r in cnt_rows}
+    counts = dict(zip(cnt[domain_col].tolist(), cnt["count"].tolist()))
     thr = mixture_plan(counts, targets)
     cases = F.lit(0)
     for d, t in sorted(thr.items()):

@@ -68,19 +68,6 @@ def _len_field(out: bytearray, field: int, payload: bytes) -> None:
     out += payload
 
 
-def _skip(buf: bytes, i: int, wt: int) -> int:
-    if wt == _WT_VARINT:
-        return _read_uvarint(buf, i)[1]
-    if wt == _WT_I64:
-        return i + 8
-    if wt == _WT_LEN:
-        n, i = _read_uvarint(buf, i)
-        return i + n
-    if wt == _WT_I32:
-        return i + 4
-    raise ValueError(f"bad wire type {wt}")
-
-
 def _fields(buf: bytes):
     """Iterate (field_no, wire_type, value) over one message's wire bytes.
     LEN fields yield the raw sub-buffer; varints the int; fixed the bytes."""

@@ -44,6 +44,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from .. import guard
 from ..codecs import decode_image
 
 _INF = 1 << 40  # caps the fixpoint sum probe exactly like hydro._BIG
@@ -392,6 +393,7 @@ def cost_distance(
 
 
 _PRED = "gx long, gy long, dist long, pgx long, pgy long"
+_DRIVER_MAX_ROWS = 2_000_000  # pred rows least_cost_path walks on the driver
 
 
 def least_cost_path(
@@ -404,8 +406,6 @@ def least_cost_path(
     band: int = 0,
     blocked: int | None = None,
     max_rounds: int = 64,
-    solve: str = "auto",
-    max_driver_rows: int = 2_000_000,
     metrics: dict | None = None,
 ) -> DataFrame:
     """Least-cost path backtrace — the GRASS r.drain / ArcGIS Cost Path
@@ -432,10 +432,10 @@ def least_cost_path(
 
     The walk itself follows the repo's guarded-driver pattern (fill's
     minimax heap, Strahler's Kahn): when the pruned forest fits
-    max_driver_rows (guard, like fill's max_coarse_edges), collect the
-    slim (cell, dist, pred) rows and walk O(total path length) on the
-    driver — paths are inherently sequential chains.  Beyond the guard
-    (solve="doubling" forces it; tested for parity), mark-propagation
+    _DRIVER_MAX_ROWS (guard.collect_small), collect the slim (cell, dist,
+    pred) rows and walk O(total path length) on the driver — paths are
+    inherently sequential chains.  Beyond the guard (the force_distributed
+    test fixture forces it; tested for parity), mark-propagation
     pointer doubling: marked = targets; per round marked |= ptr[marked],
     ptr = ptr∘ptr with frozen rows dropped — after k rounds marked holds
     pred^i(t) for i < 2^k, so log2(longest path) slim self-join rounds,
@@ -585,20 +585,7 @@ def least_cost_path(
     if not covered:
         pred_in = pred_in.unionByName(halo.filter(F.col("dist") <= max_d))
     pred_lazy = pred_in.groupBy("sx", "sy").applyInPandas(pred_pass, schema=_PRED)
-    pp = None
-    if solve in ("driver", "auto"):
-        # guard-respecting single-job probe: pull at most guard+1 rows; a
-        # short result IS the pred relation (no checkpoint, no count job),
-        # an overflow falls through to the distributed walk
-        pp = pred_lazy.limit(max_driver_rows + 1).toPandas()
-        if len(pp) > max_driver_rows:
-            # forced driver mode honors the old contract: collect it all
-            pp = pred_lazy.toPandas() if solve == "driver" else None
-    if pp is None:
-        pred = pred_lazy.localCheckpoint()
-        n_pred = pred.count()
-    else:
-        n_pred = len(pp)
+    pp = guard.collect_small(pred_lazy, _DRIVER_MAX_ROWS)
     if pp is not None:
         nxt = {
             (int(x), int(y)): (int(d), int(px), int(py))
@@ -624,11 +611,11 @@ def least_cost_path(
                 x, y = px, py
         if metrics is not None:
             metrics["walk_rounds"] = 0
-            metrics["pred_rows"] = n_pred
+            metrics["pred_rows"] = len(pp)
         return spark.createDataFrame(
             rows, "tid long, gx long, gy long, dist long"
         )
-    ptr = pred.select("gx", "gy", "pgx", "pgy")
+    ptr = pred_lazy.select("gx", "gy", "pgx", "pgy").localCheckpoint()
     n_marked = marked.count()
     rounds = 0
     while rounds < max_rounds:

@@ -49,7 +49,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from .. import guard
 from ..codecs import decode_image
+
+_DRIVER_MAX_ROWS = 4_000_000  # (id, succ) rows d8_basins doubles on the driver
 
 # receiver-relative halo positions: where an incoming strip lands in the
 # receiver's (ts+2)^2 padded patch.  (row-delta, col-delta) of the SENDER
@@ -463,7 +466,6 @@ def d8_basins(
     max_rounds: int = 40,
     metrics: dict | None = None,
     checkpoint_every: int = 2,
-    driver_max_rows: int = 4_000_000,
 ) -> DataFrame:
     """Drainage-basin labeling by POINTER DOUBLING over the D8 functional
     graph: after k rounds every pixel knows its 2^k-step successor, so a
@@ -488,18 +490,18 @@ def d8_basins(
 
     Guarded driver solve (the contracted-CC pattern): each relational
     round costs fixed Spark job overhead regardless of row count, so
-    when the slim (id, succ) relation fits `driver_max_rows` the exact
+    when the slim (id, succ) relation fits _DRIVER_MAX_ROWS the exact
     doubling schedule runs vectorized on the driver instead — ONE
-    limit-probe job replaces every round (driver_max_rows=0 forces the
-    relational path; pointer doubling stays the at-scale design)."""
-    if driver_max_rows:
-        pp = succ_df.limit(int(driver_max_rows) + 1).toPandas()
-        if len(pp) <= driver_max_rows:
-            out, r = _driver_doubling(pp, rounds, max_rounds)
-            if metrics is not None:
-                metrics["basin_rounds"] = r
-                metrics["driver_rows"] = len(pp)
-            return succ_df.sparkSession.createDataFrame(out, "id long, label long")
+    guard.collect_small job replaces every round (the force_distributed
+    test fixture forces the relational path; pointer doubling stays the
+    at-scale design)."""
+    pp = guard.collect_small(succ_df, _DRIVER_MAX_ROWS)
+    if pp is not None:
+        out, r = _driver_doubling(pp, rounds, max_rounds)
+        if metrics is not None:
+            metrics["basin_rounds"] = r
+            metrics["driver_rows"] = len(pp)
+        return succ_df.sparkSession.createDataFrame(out, "id long, label long")
     cur = succ_df.select("id", F.col("succ").alias("label")).localCheckpoint()
     n = rounds if rounds is not None else max_rounds
     for r in range(1, n + 1):

@@ -47,6 +47,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from .. import guard
 from ..codecs import decode_image
 from .focal import _D8_DELTA, _ID_BASE, terrain_fields
 
@@ -59,6 +60,11 @@ for _code, (_dx, _dy) in _D8_DELTA.items():
 
 _REL_SCHEMA = "sx long, sy long, gx0 long, gy0 long, axis int, data binary, w long"
 _COARSE_SCHEMA = "id long, succ long, w long, kind int"
+
+# driver-solve row limits (guard.collect_small), one per solve
+_ACCUM_MAX_COARSE = 4_000_000  # flow_accumulation coarse nodes / edges
+_STRAHLER_MAX_EDGES = 50_000_000  # strahler_order junction-DAG edges
+_FILL_MAX_EDGES = 50_000_000  # fill_depressions watershed-graph edges
 
 
 def _keyed_tiles(tiles: DataFrame, ts: int, S: int, payload: str) -> DataFrame:
@@ -290,7 +296,6 @@ def flow_accumulation(
     weight_fn=None,
     combine: str = "sum",
     d8_override: DataFrame | None = None,
-    driver_max_coarse: int = 4_000_000,
 ) -> DataFrame:
     """(gx, gy, acc): number of universe pixels whose D8 flow path passes
     through (gx, gy), the pixel itself included (so acc >= 1).  See the
@@ -418,48 +423,46 @@ def flow_accumulation(
     # Spark jobs regardless of row count — below the guard, run the
     # exact fixpoint as a Kahn topological accumulation over the
     # FUNCTIONAL coarse graph on the driver (same integer comb, same
-    # open-graph error on a cycle).  driver_max_coarse=0 forces the
-    # relational rounds (still the at-scale path).
+    # open-graph error on a cycle).  Past the guard the relational rounds
+    # run (still the at-scale path).
     rounds = 0
     total = None
     inflow = None
-    if driver_max_coarse:
-        g = int(driver_max_coarse)
-        w_pd = w_df.limit(g + 1).toPandas()
-        e_pd = edges.limit(g + 1).toPandas()
-        if len(w_pd) <= g and len(e_pd) <= g:
-            succ_m = dict(zip(e_pd["id"].astype(int), e_pd["succ"].astype(int)))
-            val = dict(zip(w_pd["id"].astype(int), w_pd["w"].astype(int)))
-            indeg: dict[int, int] = {}
-            for v in succ_m.values():
-                indeg[v] = indeg.get(v, 0) + 1
-            ready = [u for u in succ_m if indeg.get(u, 0) == 0]
-            n_done = 0
-            while ready:
-                u = ready.pop()
-                n_done += 1
-                v = succ_m[u]
-                if u in val:
-                    uv = val[u]
-                    val[v] = (
-                        val.get(v, 0) + uv if combine == "sum"
-                        else max(val.get(v, 0), uv)
-                    )
-                indeg[v] -= 1
-                if indeg[v] == 0 and v in succ_m:
-                    ready.append(v)
-            if n_done < len(succ_m):
-                raise RuntimeError(
-                    "flow_accumulation: coarse graph has a cycle "
-                    f"({len(succ_m) - n_done} nodes unresolved)"
+    w_pd = guard.collect_small(w_df, _ACCUM_MAX_COARSE)
+    e_pd = None if w_pd is None else guard.collect_small(edges, _ACCUM_MAX_COARSE)
+    if e_pd is not None:
+        succ_m = dict(zip(e_pd["id"].astype(int), e_pd["succ"].astype(int)))
+        val = dict(zip(w_pd["id"].astype(int), w_pd["w"].astype(int)))
+        indeg: dict[int, int] = {}
+        for v in succ_m.values():
+            indeg[v] = indeg.get(v, 0) + 1
+        ready = [u for u in succ_m if indeg.get(u, 0) == 0]
+        n_done = 0
+        while ready:
+            u = ready.pop()
+            n_done += 1
+            v = succ_m[u]
+            if u in val:
+                uv = val[u]
+                val[v] = (
+                    val.get(v, 0) + uv if combine == "sum"
+                    else max(val.get(v, 0), uv)
                 )
-            total = sum(val.values()) if val else None
-            inflow = spark.createDataFrame(
-                pd.DataFrame(
-                    {"id": list(val), "w": list(val.values())}, dtype="int64"
-                ),
-                "id long, w long",
+            indeg[v] -= 1
+            if indeg[v] == 0 and v in succ_m:
+                ready.append(v)
+        if n_done < len(succ_m):
+            raise RuntimeError(
+                "flow_accumulation: coarse graph has a cycle "
+                f"({len(succ_m) - n_done} nodes unresolved)"
             )
+        total = sum(val.values()) if val else None
+        inflow = spark.createDataFrame(
+            pd.DataFrame(
+                {"id": list(val), "w": list(val.values())}, dtype="int64"
+            ),
+            "id long, w long",
+        )
     if inflow is None:
         inflow = w_df.localCheckpoint()
         total = inflow.agg(F.sum("w")).collect()[0][0]
@@ -815,8 +818,6 @@ def strahler_order(
     streams: DataFrame,
     max_rounds: int = 64,
     metrics: dict | None = None,
-    solve: str = "auto",
-    max_driver_edges: int = 50_000_000,
     doubling_rounds: int | None = None,
 ) -> DataFrame:
     """(id, strahler): Strahler stream order over an extracted channel
@@ -840,14 +841,14 @@ def strahler_order(
          label of one of j's channel predecessors, so
          edges = anchor(preds-of-junctions) -> junction,
       3. junction-DAG solve — the contracted (anchor, junction) edge
-         list holds one row per SEGMENT.  `solve="auto"` (default)
-         collects it and runs a sequential Kahn pass on the driver when
-         it fits `max_driver_edges` — the same guarded driver-solve
-         shape as fill_depressions (Barnes' own coarse step), justified
+         list holds one row per SEGMENT.  guard.collect_small collects
+         it and a sequential Kahn pass runs on the driver when it fits
+         _STRAHLER_MAX_EDGES — the same guarded driver-solve shape as
+         fill_depressions (Barnes' own coarse step), justified
          identically: the contraction shrinks the data by orders of
          magnitude and the leftover recursion is latency-, not
-         volume-bound.  Past the guard (or `solve="relax"`) it falls
-         back to distributed Jacobi rounds of (long, long) aggregates
+         volume-bound.  Past the guard it falls back to distributed
+         Jacobi rounds of (long, long) aggregates
          with an exact integer-sum fixpoint probe (the junction rule is
          pointwise monotone, so scalar equality == pointwise fixpoint).
          Honesty note: the distributed relaxation converges in O(longest
@@ -930,16 +931,13 @@ def strahler_order(
 
     # 3. junction-DAG solve
     anchors_df = cells.filter(F.col("indeg") != 1).select("id")
-    edge_rows = (
-        edges.limit(max_driver_edges + 1).collect() if solve == "auto" else None
-    )
-    if edge_rows is not None and len(edge_rows) <= max_driver_edges:
-        n_edges = len(edge_rows)
+    edge_pd = guard.collect_small(edges, _STRAHLER_MAX_EDGES)
+    if edge_pd is not None:
+        n_edges = len(edge_pd)
         # sequential Kahn on the driver over the contracted DAG
         incoming: dict[int, list[int]] = {}
         out: dict[int, int] = {}
-        for r in edge_rows:
-            a, j = int(r["a"]), int(r["j"])
+        for a, j in zip(edge_pd["a"].tolist(), edge_pd["j"].tolist()):
             incoming.setdefault(j, []).append(a)
             out[a] = j
         from collections import deque
@@ -1104,7 +1102,6 @@ def fill_depressions(
     super_tiles: int = 1,
     payload: str = "bytes",
     band: int = 0,
-    max_coarse_edges: int = 50_000_000,
     metrics: dict | None = None,
     emit: str = "pixels",
 ) -> DataFrame:
@@ -1124,7 +1121,7 @@ def fill_depressions(
         heap on the DRIVER over the collected watershed graph — Barnes'
         own design; see the inline comment for why a distributed
         round-based relaxation is the wrong shape here, and the
-        max_coarse_edges guard.
+        _FILL_MAX_EDGES guard.
       phase B (payload shuffle #2): re-run the identical deterministic
         flood per super-tile and finalize fill(c) = max(z_local(c),
         raise(watershed(c))) — Barnes' RaiseCells step.
@@ -1217,24 +1214,22 @@ def fill_depressions(
     # is NOT scale-correct here: chains of single-cell perimeter
     # watersheds give the graph O(raster-side) diameter, so one-hop-per-
     # round relaxation needs thousands of rounds (measured: open after 64
-    # rounds at a mere 4x4 tiles).  Guarded: max_coarse_edges caps the
+    # rounds at a mere 4x4 tiles).  Guarded: _FILL_MAX_EDGES caps the
     # collect; past it, raise and point at larger super_tiles.
-    # guard + collect in ONE job: pull at most guard+1 rows — overflow
-    # means the graph is too big, exactly what count()-then-collect()
-    # checked in two jobs before
-    edge_rows = edges.limit(int(max_coarse_edges) + 1).collect()
-    n_edges = len(edge_rows)
-    if n_edges > max_coarse_edges:
+    edge_pd = guard.collect_small(edges, _FILL_MAX_EDGES)
+    if edge_pd is None:
         raise ValueError(
-            f"fill_depressions: watershed graph has > "
-            f"max_coarse_edges={max_coarse_edges} edges; raise super_tiles to "
-            "shrink the perimeter fraction (graph size ~ 4/(S*ts))"
+            f"fill_depressions: watershed graph has > {_FILL_MAX_EDGES} "
+            "edges; raise super_tiles to shrink the perimeter fraction "
+            "(graph size ~ 4/(S*ts))"
         )
+    n_edges = len(edge_pd)
     import heapq
 
     adj: dict[int, list[tuple[int, int]]] = {}
-    for r in edge_rows:
-        a, b, w = int(r["a"]), int(r["b"]), int(r["w"])
+    for a, b, w in zip(
+        edge_pd["a"].tolist(), edge_pd["b"].tolist(), edge_pd["w"].tolist()
+    ):
         adj.setdefault(a, []).append((b, w))
         adj.setdefault(b, []).append((a, w))
     best: dict[int, int] = {0: -1}

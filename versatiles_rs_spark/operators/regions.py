@@ -61,38 +61,10 @@ def region_segments(cells: DataFrame, n: int, value_col: str = "v") -> DataFrame
     ).select("seg_id", "gy", "x0", "x1", "v", "len")
 
 
-def _driver_union_find(pairs: list[tuple[int, int]]) -> dict[int, int]:
-    """Sequential union-find with min-id roots over the contracted
-    segment graph (the fill/Strahler guarded-driver pattern: the
-    CONTRACTED graph is ~runs, a tiny fraction of cells, so solving it
-    on the driver replaces O(log n) Spark CC rounds with one job)."""
-    parent: dict[int, int] = {}
-    nodes: set[int] = set()
-
-    def find(x: int) -> int:
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != r:
-            parent[x], x = r, parent[x]
-        return r
-
-    for u, v in pairs:
-        nodes.add(u)
-        nodes.add(v)
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            # min id becomes the root, so labels are deterministic
-            lo, hi = (ru, rv) if ru < rv else (rv, ru)
-            parent[hi] = lo
-    return {x: find(x) for x in nodes}
-
-
 def region_group(
     cells: DataFrame,
     n: int,
     value_col: str = "v",
-    max_driver_edges: int = 2_000_000,
     return_segments: bool = False,
 ) -> DataFrame:
     """Label 4-connected equal-value regions of a (gx, gy, v) cell
@@ -100,11 +72,11 @@ def region_group(
     (region, v, n_cells, min_gx, min_gy, max_gx, max_gy) with region =
     the smallest packed cell id (gy*n + gx) in the region.
 
-    The segment-adjacency graph is solved on the driver (union-find)
-    while it fits under `max_driver_edges` — one job instead of O(log n)
-    star rounds; past the guard it falls back to distributed
-    large/small-star connected components (identical min-id labels)."""
-    spark = cells.sparkSession
+    The segment-adjacency graph (~runs, a tiny fraction of cells) goes to
+    connected_components, which solves it by driver union-find while it
+    fits that guard — one job, and the small local result joins back as
+    a broadcast — and by large/small-star rounds past it (identical
+    min-id labels)."""
     segs = region_segments(cells, n, value_col).localCheckpoint()
     a, b = segs.alias("a"), segs.alias("b")
     edges = a.join(
@@ -114,18 +86,7 @@ def region_group(
         & (F.col("b.x0") <= F.col("a.x1"))
         & (F.col("a.x0") <= F.col("b.x1")),
     ).select(F.col("a.seg_id").alias("id_a"), F.col("b.seg_id").alias("id_b"))
-    pairs = edges.limit(max_driver_edges + 1).collect()
-    if len(pairs) <= max_driver_edges:
-        roots = _driver_union_find([(r["id_a"], r["id_b"]) for r in pairs])
-        if roots:
-            cc = spark.createDataFrame(
-                [(int(k), int(v)) for k, v in roots.items()], "id long, component long"
-            )
-        else:
-            cc = spark.createDataFrame([], "id long, component long")
-        cc = F.broadcast(cc)
-    else:
-        cc = connected_components(edges)
+    cc = connected_components(edges, "id_a", "id_b")
     labeled = segs.join(cc, segs["seg_id"] == cc["id"], "left").select(
         segs["*"], F.coalesce(cc["component"], segs["seg_id"]).alias("region")
     )
@@ -146,7 +107,6 @@ def sieve_small_regions(
     n: int,
     min_cells: int,
     value_col: str = "v",
-    max_driver_edges: int = 2_000_000,
 ) -> DataFrame:
     """gdal_sieve / GRASS r.reclass.area: remove regions smaller than
     `min_cells` by merging each into its LARGEST neighboring SURVIVING
@@ -163,7 +123,7 @@ def sieve_small_regions(
     SEGMENT relation (rook: vertical interval overlaps + horizontal run
     boundaries), so the edge list is O(runs), never O(cells)."""
     labeled = region_group(
-        cells, n, value_col, max_driver_edges, return_segments=True
+        cells, n, value_col, return_segments=True
     ).localCheckpoint()
     sizes = labeled.groupBy("region").agg(
         F.min("v").alias("v"), F.sum("len").alias("n_cells")

@@ -76,21 +76,9 @@ def _pow2_long(z: Column) -> Column:
     return F.pow(F.lit(2.0), z).cast("long")
 
 
-def sort_index_expr(z: Column, x: Column, y: Column) -> Column:
-    """Row-major linear index with level offset (4^z-1)/3 (tile_coord.rs:110-114)."""
-    size = _pow2_long(z)
-    offset = (size * size - F.lit(1)) / F.lit(3)
-    return (offset.cast("long") + size * y + x).cast("long")
-
-
 def flip_y_expr(z: Column, y: Column) -> Column:
     """TMS <-> XYZ y flip (tile_coord.rs:179-181)."""
     return _pow2_long(z) - F.lit(1) - y
-
-
-def parent_exprs(z: Column, x: Column, y: Column) -> tuple[Column, Column, Column]:
-    """Parent tile (z-1, x>>1, y>>1) (tile_coord.rs:185-188)."""
-    return z - F.lit(1), F.shiftright(x, 1), F.shiftright(y, 1)
 
 
 def block_expr(xy: Column, block_size: int) -> Column:
@@ -128,12 +116,6 @@ def hilbert_index_udf(z: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
     return pd.Series(
         tm.hilbert_index(z.to_numpy("int64"), x.to_numpy("int64"), y.to_numpy("int64"))
     )
-
-
-@pandas_udf(LongType())
-def quadkey_udf(z: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
-    """Bit-interleaved depth-first key (traversal/order.rs:94-110)."""
-    return pd.Series(tm.quadkey(z.to_numpy("int64"), x.to_numpy("int64"), y.to_numpy("int64")))
 
 
 def with_hilbert(df: DataFrame, z="z", x="x", y="y", out: str = "hilbert") -> DataFrame:

@@ -45,7 +45,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def run(spark, zoom: int, out: str, min_accum: int, super_tiles: int, bowls: bool):
     from pyspark.sql import functions as F
 
-    from versatiles_rs_spark import fixtures
+    from versatiles_rs_spark import fixtures, guard
     from versatiles_rs_spark.operators.focal import (
         d8_basins,
         d8_successors,
@@ -84,18 +84,17 @@ def run(spark, zoom: int, out: str, min_accum: int, super_tiles: int, bowls: boo
     stats["n_tiles"] = dem.count()
 
     # 2 depression filling -> conditioned surface tiles
-    fill_m: dict = {}
-
     def build_filled():
         t = dem.select("x", "y", "bytes")
-        return fill_depressions(
-            t, super_tiles=super_tiles, emit="tiles", metrics=fill_m
-        ).select(F.lit(zoom).alias("z"), "x", "y", "bytes", "fmt")
+        return fill_depressions(t, super_tiles=super_tiles, emit="tiles").select(
+            F.lit(zoom).alias("z"), "x", "y", "bytes", "fmt"
+        )
 
-    filled = timed("filled", 2, build_filled)
-    if fill_m:
-        stats["watershed_nodes"] = fill_m.get("spill_nodes")
-        stats["watershed_edges"] = fill_m.get("spill_edges")
+    with guard.recording() as rec:
+        filled = timed("filled", 2, build_filled)
+    if "fill_depressions" in rec:  # absent when the stage resumed
+        stats["watershed_nodes"] = rec["fill_depressions"]["nodes"]
+        stats["watershed_edges"] = rec["fill_depressions"]["rows"]
 
     # 3 stream network (slim relation)
     def build_streams():

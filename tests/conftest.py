@@ -26,16 +26,18 @@ def sf_dir():
 def force_distributed(monkeypatch):
     """Context manager: inside it every guard.collect_small probe reports
     an over-limit relation, so guarded operators take their distributed
-    branch (or raise, where they have none).  It yields the names of the
-    functions whose probe it refused, in call order."""
+    branch (or raise, where they have none), and notes path="distributed"
+    as the real probe does.  It yields the ops whose probe it refused, in
+    call order."""
     from versatiles_rs_spark import guard
 
     @contextlib.contextmanager
     def forced():
         refused: list[str] = []
 
-        def over_limit(df, max_rows):
-            refused.append(sys._getframe(1).f_code.co_name)
+        def over_limit(df, max_rows, op):
+            refused.append(op)
+            guard.note(op, path="distributed")
             return None
 
         with monkeypatch.context() as m:

@@ -11,6 +11,7 @@ import heapq
 import numpy as np
 import pytest
 
+from versatiles_rs_spark import guard
 from versatiles_rs_spark.codecs import encode_png
 from versatiles_rs_spark.operators.costdist import _INF, cost_distance, dijkstra_grid
 
@@ -95,16 +96,16 @@ def test_fuzz_distributed_matches_global(spark, seed, s):
         if cost[y, x] >= 0:
             srcs.append((x, y))
     want = global_dijkstra(cost, srcs)
-    m: dict = {}
-    pdf = cost_distance(
-        dem_to_tiles(spark, raster.astype(np.int64), ts),
-        srcs, tile_size=ts, super_tiles=s, blocked=255, metrics=m,
-    ).toPandas()
+    with guard.recording() as rec:
+        pdf = cost_distance(
+            dem_to_tiles(spark, raster.astype(np.int64), ts),
+            srcs, tile_size=ts, super_tiles=s, blocked=255,
+        ).toPandas()
     assert len(pdf) == int((cost >= 0).sum())  # blocked cells excluded
     got = np.full((n, n), -1, dtype=np.int64)
     got[pdf["gy"].to_numpy(), pdf["gx"].to_numpy()] = pdf["dist"].to_numpy()
     np.testing.assert_array_equal(got, want)
-    assert m["dijkstra_rounds"] >= 1
+    assert rec["cost_distance"]["rounds"] >= 1
 
 
 def test_cross_supertile_wall_routing(spark):
@@ -119,10 +120,9 @@ def test_cross_supertile_wall_routing(spark):
     cost = to_cost(v, (np.arange(n)[:, None] != gap) & (np.arange(n)[None, :] == 32))
     srcs = [(5, 5)]
     want = global_dijkstra(cost, srcs)
-    m: dict = {}
     pdf = cost_distance(
         dem_to_tiles(spark, raster, ts), srcs,
-        tile_size=ts, super_tiles=2, blocked=255, metrics=m,
+        tile_size=ts, super_tiles=2, blocked=255,
     ).toPandas()
     got = np.full((n, n), -1, dtype=np.int64)
     got[pdf["gy"].to_numpy(), pdf["gx"].to_numpy()] = pdf["dist"].to_numpy()
@@ -249,11 +249,12 @@ def test_fuzz_least_cost_path(spark, seed, s, forced, force_distributed):
         x, y = map(int, rng.integers(0, n, 2))
         if cost[y, x] >= 0 and (x, y) not in tgts:
             tgts.append((x, y))
-    m: dict = {}
-    with force_distributed() if forced else contextlib.nullcontext():
+    with guard.recording() as rec, (
+        force_distributed() if forced else contextlib.nullcontext()
+    ):
         pdf = least_cost_path(
             dem_to_tiles(spark, raster.astype(np.int64), ts),
-            srcs, tgts, tile_size=ts, super_tiles=s, blocked=255, metrics=m,
+            srcs, tgts, tile_size=ts, super_tiles=s, blocked=255,
         ).toPandas()
     got = {
         tid: sorted(
@@ -267,7 +268,9 @@ def test_fuzz_least_cost_path(spark, seed, s, forced, force_distributed):
             (x, y, d) for x, y, d in scalar_backtrace(cost, dist_grid, srcs, t)
         )
         assert got.get(i, []) == want, f"target {i}"
-    assert m["walk_rounds"] >= (1 if forced else 0)
+    walk = rec["least_cost_path"]
+    assert walk["path"] == ("distributed" if forced else "driver")
+    assert walk.get("rounds", 0) >= (1 if forced else 0)
 
 
 def test_auto_super_tiles_tries_non_power_of_two_cap(spark):

@@ -5,6 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from versatiles_rs_spark import guard
 from versatiles_rs_spark.joins.dbscan import eps_neighbor_pairs, grid_dbscan
 
 
@@ -108,11 +109,11 @@ def test_random_field_parity_adaptive(spark):
         [(i, x, y) for i, (x, y) in pts.items()], "id long, lon double, lat double"
     )
     eps = 4.0
-    metrics: dict = {}
-    got = {
-        r["id"]: (r["cluster"], r["role"])
-        for r in grid_dbscan(df, eps=eps, min_pts=None, metrics=metrics).collect()
-    }
+    with guard.recording() as rec:
+        got = {
+            r["id"]: (r["cluster"], r["role"])
+            for r in grid_dbscan(df, eps=eps, min_pts=None).collect()
+        }
     counts = [
         sum(
             1
@@ -122,7 +123,7 @@ def test_random_field_parity_adaptive(spark):
         for i in pts
     ]
     mp = int(np.floor(np.mean(counts))) + 1
-    assert metrics["min_pts"] == mp
+    assert rec["grid_dbscan"]["min_pts"] == mp
     assert got == _brute_dbscan(pts, eps, mp)
     # the field genuinely exercises all three roles
     roles = {v[1] for v in got.values()}

@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from versatiles_rs_spark import guard
 from versatiles_rs_spark.functions.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
@@ -306,20 +307,20 @@ def test_bucket_cap_drops_hot_buckets(spark):
 
 def test_bucket_cap_reports_dropped_counts(spark):
     """The cap is an observable recall trade (VERDICT r2 #3): a planted
-    over-cap bucket must surface its dropped bucket/row counts through the
-    metrics dict (and the warning log), never silently."""
+    over-cap bucket must surface its dropped bucket/row counts as a
+    guard note (and the warning log), never silently."""
     df, _ = _planted_cluster_df(spark, m=40)
-    metrics: dict = {}
-    minhash_lsh_pairs(
-        df, threshold=0.5, pre_collapse=False, bucket_cap=10, metrics=metrics
-    ).collect()
+    with guard.recording() as rec:
+        minhash_lsh_pairs(
+            df, threshold=0.5, pre_collapse=False, bucket_cap=10
+        ).collect()
     # 40 identical docs share every one of the 16 band buckets
-    assert metrics["capped_buckets"] >= 16
-    assert metrics["capped_rows"] >= 16 * 40
+    assert rec["minhash_lsh_pairs"]["capped_buckets"] >= 16
+    assert rec["minhash_lsh_pairs"]["capped_rows"] >= 16 * 40
     # and a run with no hot buckets reports zeros, not missing keys
-    m2: dict = {}
-    minhash_lsh_pairs(df, threshold=0.5, pre_collapse=True, metrics=m2).collect()
-    assert m2 == {"capped_buckets": 0, "capped_rows": 0}
+    with guard.recording() as rec:
+        minhash_lsh_pairs(df, threshold=0.5, pre_collapse=True).collect()
+    assert rec["minhash_lsh_pairs"] == {"capped_buckets": 0, "capped_rows": 0}
 
 
 def test_expand_pairs_shuffle_fallback_parity(spark):

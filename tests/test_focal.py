@@ -9,7 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from versatiles_rs_spark import fixtures
+from versatiles_rs_spark import fixtures, guard
 from versatiles_rs_spark.fixtures import dem_value
 from versatiles_rs_spark.operators.focal import (
     _ID_BASE,
@@ -219,10 +219,10 @@ def test_d8_basins_fixpoint_mode(spark):
         fixtures.dem_raster_df(spark, zoom=0, partitions=1)
     ).cache()
     try:
-        m: dict = {}
-        fix = d8_basins(d8_successors(pixels), rounds=None, metrics=m)
+        with guard.recording() as rec:
+            fix = d8_basins(d8_successors(pixels), rounds=None)
         fixed = d8_basins(d8_successors(pixels), rounds=6)
-        assert m["basin_rounds"] <= 7
+        assert rec["d8_basins"]["rounds"] <= 7
         a = sorted(map(tuple, fix.collect()))
         b = sorted(map(tuple, fixed.collect()))
         assert a == b

@@ -8,7 +8,7 @@ and across a worst-case DEM whose flow crosses every tile boundary."""
 import numpy as np
 import pytest
 
-from versatiles_rs_spark import fixtures
+from versatiles_rs_spark import fixtures, guard
 from versatiles_rs_spark.codecs import encode_png
 from versatiles_rs_spark.fixtures import dem_value
 from versatiles_rs_spark.operators.focal import terrain_fields
@@ -70,18 +70,18 @@ def test_flow_accumulation_matches_global(spark, zoom, s):
     single-super-tile (S=2: phase A emits no cross edges at all)."""
     n = (1 << zoom) * 256
     exp, valid = global_accumulation(dem_mosaic(n))
-    m: dict = {}
-    pdf = flow_accumulation(
-        fixtures.dem_raster_df(spark, zoom=zoom, partitions=4),
-        super_tiles=s,
-        metrics=m,
-    ).toPandas()
+    with guard.recording() as rec:
+        pdf = flow_accumulation(
+            fixtures.dem_raster_df(spark, zoom=zoom, partitions=4),
+            super_tiles=s,
+        ).toPandas()
     assert len(pdf) == int(valid.sum())
     np.testing.assert_array_equal(as_grid(pdf, exp.shape), exp * valid)
+    m = rec["flow_accumulation"]
     if s == 2:
-        assert m["coarse_rounds"] == 0 and m["coarse_inflow_total"] == 0
+        assert m["rounds"] == 0 and m["inflow_total"] == 0
     else:
-        assert m["coarse_inflow_total"] > 0
+        assert m["inflow_total"] > 0
 
 
 def ramp_tiles_df(spark, n: int, ts: int):
@@ -102,14 +102,14 @@ def test_flow_accumulation_multihop_ramp(spark, force_distributed):
     upstream plus self), and the Jacobi relaxation needs >= 2 rounds —
     flow at gx=62 accumulated across three super-tile crossings."""
     n, ts = 64, 16
-    m: dict = {}
-    with force_distributed():  # the relational rounds this test pins
+    # the relational rounds this test pins
+    with guard.recording() as rec, force_distributed():
         pdf = flow_accumulation(
-            ramp_tiles_df(spark, n, ts), tile_size=ts, super_tiles=1, metrics=m,
+            ramp_tiles_df(spark, n, ts), tile_size=ts, super_tiles=1,
         ).toPandas()
     assert len(pdf) == (n - 2) * (n - 2)
     assert (pdf["acc"].to_numpy() == pdf["gx"].to_numpy()).all()
-    assert m["coarse_rounds"] >= 2
+    assert rec["flow_accumulation"]["rounds"] >= 2
     # default guarded-driver path: identical values, zero coarse rounds
     drv = flow_accumulation(
         ramp_tiles_df(spark, n, ts), tile_size=ts, super_tiles=1
@@ -142,19 +142,18 @@ def test_flow_accumulation_max_multihop_ramp(spark, force_distributed):
     universe cell's elevation n-2 — a value that must survive 3
     super-tile crossings and >= 2 coarse max-relaxation rounds."""
     n, ts = 64, 16
-    m: dict = {}
-    with force_distributed():  # the relational rounds this test pins
+    # the relational rounds this test pins
+    with guard.recording() as rec, force_distributed():
         pdf = flow_accumulation(
             ramp_tiles_df(spark, n, ts),
             tile_size=ts,
             super_tiles=1,
-            metrics=m,
             weight_fn=lambda e: e,
             combine="max",
         ).toPandas()
     assert len(pdf) == (n - 2) * (n - 2)
     assert (pdf["acc"].to_numpy() == n - 2).all()
-    assert m["coarse_rounds"] >= 2
+    assert rec["flow_accumulation"]["rounds"] >= 2
     # default guarded-driver Kahn path: identical max-semiring values
     drv = flow_accumulation(
         ramp_tiles_df(spark, n, ts), tile_size=ts, super_tiles=1,
@@ -249,20 +248,21 @@ def test_strahler_order_heap_tree(spark, force_distributed):
         F.when(F.col("id") == 1, F.col("id")).otherwise(F.expr("id div 2")).alias("succ"),
     )
     streams = ids.filter((F.col("id") * 2654435761) % mod != 0)
-    m: dict = {}
-    pdf = strahler_order(universe, streams, metrics=m).toPandas()
+    with guard.recording() as rec:
+        pdf = strahler_order(universe, streams).toPandas()
     got = dict(zip(pdf["id"].astype(int), pdf["strahler"].astype(int)))
     assert got == exp
     assert max(got.values()) >= 8
-    assert m["solve"] == "driver" and m["n_junctions"] > 100
+    m = rec["strahler_order"]
+    assert m["path"] == "driver" and m["junctions"] > 100
     # distributed Jacobi fallback must agree exactly
-    m2: dict = {}
-    with force_distributed() as refused:
-        pdf2 = strahler_order(universe, streams, metrics=m2).toPandas()
+    with guard.recording() as rec, force_distributed() as refused:
+        pdf2 = strahler_order(universe, streams).toPandas()
     assert refused == ["d8_basins", "strahler_order"]
     got2 = dict(zip(pdf2["id"].astype(int), pdf2["strahler"].astype(int)))
     assert got2 == exp
-    assert m2["solve"] == "relax" and m2["strahler_rounds"] >= 3
+    m2 = rec["strahler_order"]
+    assert m2["path"] == "distributed" and m2["rounds"] >= 3
 
 
 def test_strahler_order_matches_global_random_dem(spark):
@@ -292,15 +292,15 @@ def test_strahler_order_matches_global_random_dem(spark):
         tiles, tile_size=ts, super_tiles=1, min_accum=t
     ).select((F.col("gx") * F.lit(4294967296) + F.col("gy")).alias("id"))
     pixels = focal_terrain_pixels(tiles, tile_size=ts)
-    m: dict = {}
-    pdf = strahler_order(d8_successors(pixels), streams, metrics=m).toPandas()
+    with guard.recording() as rec:
+        pdf = strahler_order(d8_successors(pixels), streams).toPandas()
     assert len(pdf) == len(exp)
     got = {
         (int(i % 4294967296) - 1, int(i // 4294967296) - 1): int(s)
         for i, s in zip(pdf["id"], pdf["strahler"])
     }
     assert got == exp
-    assert m["n_junctions"] > 50 and max(got.values()) >= 2
+    assert rec["strahler_order"]["junctions"] > 50 and max(got.values()) >= 2
 
 
 def test_strahler_order_junction_free_ramp(spark):
@@ -318,11 +318,12 @@ def test_strahler_order_junction_free_ramp(spark):
         tiles, tile_size=ts, super_tiles=1, min_accum=t
     ).select((F.col("gx") * F.lit(4294967296) + F.col("gy")).alias("id"))
     pixels = focal_terrain_pixels(tiles, tile_size=ts)
-    m: dict = {}
-    pdf = strahler_order(d8_successors(pixels), streams, metrics=m).toPandas()
+    with guard.recording() as rec:
+        pdf = strahler_order(d8_successors(pixels), streams).toPandas()
     assert len(pdf) == (n - 2) * (n - 2 - (t - 1))  # cells with gx >= t
     assert (pdf["strahler"].to_numpy() == 1).all()
-    assert m["n_junctions"] == 0 and m["strahler_rounds"] == 0
+    # no junction edges: the driver solve, no relaxation rounds
+    assert rec["strahler_order"] == {"path": "driver", "rows": 0, "junctions": 0}
 
 
 def test_flow_accumulation_single_payload_exchange(spark):
@@ -388,15 +389,16 @@ def test_fill_depressions_matches_global_flood(spark):
     g = np.arange(n, dtype=np.int64)
     v = dem_bowls_value(g[None, :], g[:, None])
     exp = global_priority_flood(v)
-    m: dict = {}
-    pdf = fill_depressions(
-        dem_bowls_raster_df(spark, partitions=4), super_tiles=1, metrics=m
-    ).toPandas()
+    with guard.recording() as rec:
+        pdf = fill_depressions(
+            dem_bowls_raster_df(spark, partitions=4), super_tiles=1
+        ).toPandas()
     assert len(pdf) == n * n
     got = np.zeros_like(exp)
     got[pdf["gy"].to_numpy(), pdf["gx"].to_numpy()] = pdf["filled"].to_numpy()
     np.testing.assert_array_equal(got, exp)
-    assert m["spill_edges"] > 0 and m["spill_nodes"] > 0
+    m = rec["fill_depressions"]
+    assert m["rows"] > 0 and m["nodes"] > 0
     for cx, cy, r, floor in DEM_BOWLS:
         pit = got[cy - r : cy + r + 1, cx - r : cx + r + 1]
         assert pit.min() == pit.max() == bowl_spill(cx, cy, r)
@@ -600,16 +602,16 @@ def _resolve_flats_check(spark, v: np.ndarray, ts: int, s: int):
     from versatiles_rs_spark.operators.hydro import resolve_flats
 
     exp = global_resolve_flats(v)
-    m: dict = {}
-    pdf = resolve_flats(
-        dem_to_tiles(spark, v, ts), tile_size=ts, super_tiles=s, metrics=m
-    ).toPandas()
+    with guard.recording() as rec:
+        pdf = resolve_flats(
+            dem_to_tiles(spark, v, ts), tile_size=ts, super_tiles=s
+        ).toPandas()
     got = {
         (int(r.gx), int(r.gy)): (int(r.dist), int(r.d8))
         for r in pdf.itertuples()
     }
     assert got == exp
-    return m
+    return rec["resolve_flats"]
 
 
 def test_resolve_flats_terraced_ramp(spark):
@@ -619,7 +621,7 @@ def test_resolve_flats_terraced_ramp(spark):
     g = np.arange(n, dtype=np.int64)
     v = np.broadcast_to((n - 1 - g)[None, :] // 8, (n, n)).copy()
     m = _resolve_flats_check(spark, v, ts, 1)
-    assert m["bfs_rounds"] >= 1
+    assert m["rounds"] >= 1
     # direction sanity: resolved flats on a pure east ramp flow east (1)
     from test_hydro_fuzz import dem_to_tiles
     from versatiles_rs_spark.operators.hydro import resolve_flats
@@ -698,10 +700,8 @@ def test_flow_accumulation_with_resolved_flats(spark):
     flats = global_resolve_flats(filled)
     exp, valid = global_accumulation(filled, flats=flats)
     resolved = resolve_flats(filled_tiles, tile_size=ts, super_tiles=1)
-    m: dict = {}
     pdf = flow_accumulation(
-        filled_tiles, tile_size=ts, super_tiles=1,
-        d8_override=resolved, metrics=m,
+        filled_tiles, tile_size=ts, super_tiles=1, d8_override=resolved,
     ).toPandas()
     assert len(pdf) == int(valid.sum())
     np.testing.assert_array_equal(as_grid(pdf, exp.shape), exp * valid)
@@ -734,17 +734,17 @@ def test_flow_accumulation_corner_exit_leaves_raster(spark):
     v[0, 15] = 0                  # world-ring corner: (16,1) exits NW
     exp, valid = global_accumulation(v)
     # (15,0) is world-ring: outside the interior field => non-universe
-    m: dict = {}
-    pdf = flow_accumulation(
-        dem_to_tiles(spark, v, ts), tile_size=ts, super_tiles=1, metrics=m
-    ).toPandas()
+    with guard.recording() as rec:
+        pdf = flow_accumulation(
+            dem_to_tiles(spark, v, ts), tile_size=ts, super_tiles=1
+        ).toPandas()
     assert len(pdf) == int(valid.sum())
     np.testing.assert_array_equal(as_grid(pdf, exp.shape), exp * valid)
     # the chain really crossed the border: (16,1) swallowed the whole
     # run (chain cells + plateau side inflows), >= the 15 chain cells
     got = {(int(r.gx), int(r.gy)): int(r.acc) for r in pdf.itertuples()}
     assert got[(16, 1)] == int(exp[0, 15]) and got[(16, 1)] > 15
-    assert m["coarse_inflow_total"] >= 15
+    assert rec["flow_accumulation"]["inflow_total"] >= 15
 
 
 def _floor_log2_ratio(p: int, q: int) -> int:

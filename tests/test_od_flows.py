@@ -5,6 +5,7 @@ import datetime
 
 from pyspark.sql import functions as F
 
+from versatiles_rs_spark import guard
 from versatiles_rs_spark.functions.sessions import od_flows
 
 T0 = datetime.datetime(2024, 5, 1, 8, 0, 0)
@@ -129,18 +130,18 @@ def test_pagerank_reference_parity(spark):
     df = spark.createDataFrame(
         flows, "o_x long, o_y long, d_x long, d_y long, n_trips long, n_users long"
     )
-    metrics: dict = {}
-    got = {
-        (r["x"], r["y"]): r["pr"]
-        for r in pagerank_flows(df, iterations=10, metrics=metrics).collect()
-    }
+    with guard.recording() as rec:
+        got = {
+            (r["x"], r["y"]): r["pr"]
+            for r in pagerank_flows(df, iterations=10).collect()
+        }
 
     # exact python replay (same integer ops)
     scale, d = 1_000_000_000_000, 85
     edges = [((o1, o2), (d1, d2), w) for o1, o2, d1, d2, w, _ in flows]
     nodes = sorted({e[0] for e in edges} | {e[1] for e in edges})
     n = len(nodes)
-    assert metrics["pagerank_nodes"] == n
+    assert rec["pagerank_flows"]["nodes"] == n
     ow = {}
     for u, _, w in edges:
         ow[u] = ow.get(u, 0) + w

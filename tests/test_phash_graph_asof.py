@@ -9,6 +9,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from versatiles_rs_spark import guard
 from versatiles_rs_spark.functions.graph import connected_components, dedup_clusters
 from versatiles_rs_spark.functions.phash import _block_bounds, phash_neardup_pairs
 from versatiles_rs_spark.joins.asof import asof_join
@@ -164,16 +165,15 @@ def test_cc_chain_converges_logarithmically(spark, force_distributed):
     # large-star/small-star must finish in O(log n)
     edges = [(i, i + 1) for i in range(1022)]
     df = spark.createDataFrame(pd.DataFrame(edges, columns=["id_a", "id_b"]))
-    metrics = {}
-    with force_distributed():
-        got = connected_components(df, metrics=metrics)
+    with guard.recording() as rec, force_distributed():
+        got = connected_components(df)
     assert got.filter(F.col("component") != 0).count() == 0
     assert got.count() == 1023
-    assert 0 < metrics["cc_rounds"] <= 12, metrics
+    assert 0 < rec["connected_components"]["rounds"] <= 12, rec
     # the guard's fast path: same chain through the driver union-find
-    dmetrics = {}
-    drv = connected_components(df, metrics=dmetrics)
-    assert dmetrics["cc_rounds"] == 0 and dmetrics["cc_driver_edges"] == 1022
+    with guard.recording() as rec:
+        drv = connected_components(df)
+    assert rec["connected_components"] == {"path": "driver", "rows": 1022}
     assert drv.filter(F.col("component") != 0).count() == 0
     assert drv.count() == 1023
 

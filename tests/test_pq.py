@@ -199,49 +199,3 @@ def test_ivfpq_plan_slim_codes_no_vector_shuffle(spark, sf_dir):
             assert "embedding" not in line and "qv" not in line, line
     join_lines = [l for l in plan.splitlines() if "Join" in l and "ivf_list" in l]
     assert join_lines, plan
-
-
-def test_distributed_trainer_parity_and_bounded_exchange(spark):
-    """The mapInPandas trainer must (a) reproduce the driver-sample trainer
-    when the sample covers the whole set — identical init rule, so the only
-    delta is float64 re-association across partition partials (~1e-15) —
-    and (b) never move embeddings to the driver: per-iteration exchange is
-    at most partitions x nlist slim partial rows (VERDICT r3 item 7)."""
-    from versatiles_rs_spark.functions.ann import (
-        train_ivf_centroids,
-        train_ivf_centroids_distributed,
-    )
-
-    df, _ = _blob_df(spark, n_per=40, dim=32, seed=7)
-    df = df.repartition(6)
-    c_sample = train_ivf_centroids(df, nlist=8, dim=32, sample_cap=10_000, iters=8)
-    m: dict = {}
-    c_dist = train_ivf_centroids_distributed(
-        df, nlist=8, dim=32, iters=8, metrics=m
-    )
-    assert np.allclose(c_sample, c_dist, atol=1e-9), np.abs(c_sample - c_dist).max()
-    # bounded-exchange gate: far below N=320 rows, and below parts*nlist
-    assert 0 < m["max_partial_rows"] <= 6 * 8
-    # determinism: a second run is bit-identical
-    c2 = train_ivf_centroids_distributed(df, nlist=8, dim=32, iters=8)
-    assert (c_dist == c2).all()
-
-
-def test_distributed_trainer_feeds_ivf_search(spark):
-    """Centroids from the distributed trainer drive ann_ivf_topk at the same
-    recall as the sample-trained ones (the production path for training sets
-    that exceed a driver sample)."""
-    from versatiles_rs_spark.functions.ann import (
-        ann_ivf_topk,
-        train_ivf_centroids_distributed,
-    )
-
-    df, _ = _blob_df(spark, n_per=40, dim=32, seed=11)
-    q = df.filter(F.col("vec_id") % 64 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    k = 10
-    brute = ann_bruteforce_topk(df, q, k=k).collect()
-    C = train_ivf_centroids_distributed(df.repartition(5), nlist=8, dim=32, iters=8)
-    got = ann_ivf_topk(df, q, k=k, nlist=8, nprobe=3, dim=32, centroids=C).collect()
-    assert _recall(got, brute, k) >= 0.8

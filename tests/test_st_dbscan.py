@@ -9,6 +9,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from versatiles_rs_spark import guard
 from versatiles_rs_spark.joins.st_dbscan import st_dbscan
 
 BASE = datetime(2024, 3, 1)
@@ -76,15 +77,13 @@ def test_st_dbscan_matches_brute(spark):
         rows.append((20 + k, -60.0 + 5.0 * k, 0.0, BASE + timedelta(hours=k)))
     rows.append((30, 120.0, -40.0, BASE))  # lone noise
     df = _df(spark, rows)
-    metrics: dict = {}
-    got = {
-        r["id"]: (r["cluster"], r["role"])
-        for r in st_dbscan(
-            df, eps_space=2.0, eps_time_s=6 * 3600, metrics=metrics
-        ).collect()
-    }
+    with guard.recording() as rec:
+        got = {
+            r["id"]: (r["cluster"], r["role"])
+            for r in st_dbscan(df, eps_space=2.0, eps_time_s=6 * 3600).collect()
+        }
     want, mp = _brute(rows, 2.0, 6 * 3600)
-    assert metrics["min_pts"] == mp
+    assert rec["st_dbscan"]["min_pts"] == mp
     assert got == want
     # the two bursts are separate clusters despite identical locations
     a = {got[i][0] for i in range(6)}

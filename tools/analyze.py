@@ -99,6 +99,7 @@ def _load_tiles(spark, path: str, zoom: int):
 
 def _run_hydro(spark, args, F) -> dict:
     """DEM hydrology over a tile source: D8 basins + flow accumulation."""
+    from versatiles_rs_spark import guard
     from versatiles_rs_spark.operators.focal import (
         d8_basins,
         d8_successors,
@@ -113,19 +114,18 @@ def _run_hydro(spark, args, F) -> dict:
     tiles = _load_tiles(spark, args.table, args.zoom).localCheckpoint()
     fill_stats = None
     if args.fill:
-        fm0: dict = {}
-        filled_px = fill_depressions(
-            tiles, tile_size=args.tile_size, super_tiles=args.super_tiles,
-            metrics=fm0,
-        )
+        with guard.recording() as rec:
+            filled_px = fill_depressions(
+                tiles, tile_size=args.tile_size, super_tiles=args.super_tiles,
+            )
         raised = filled_px.filter(F.col("filled") > F.col("elev"))
         agg = raised.agg(
             F.count("*").alias("n"), F.sum(F.col("filled") - F.col("elev")).alias("vol")
         ).collect()[0]
         fill_stats = {
             "raised_pixels": agg["n"], "fill_volume": agg["vol"] or 0,
-            "watershed_nodes": fm0.get("spill_nodes"),
-            "watershed_edges": fm0.get("spill_edges"),
+            "watershed_nodes": rec["fill_depressions"]["nodes"],
+            "watershed_edges": rec["fill_depressions"]["rows"],
         }
         tiles = fill_depressions(
             tiles, tile_size=args.tile_size, super_tiles=args.super_tiles,
@@ -134,15 +134,14 @@ def _run_hydro(spark, args, F) -> dict:
     resolve_stats = None
     d8_ovr = None
     if args.resolve_flats:
-        rm: dict = {}
-        d8_ovr = resolve_flats(
-            tiles, tile_size=args.tile_size, super_tiles=args.super_tiles,
-            metrics=rm,
-        ).localCheckpoint()
+        with guard.recording() as rec:
+            d8_ovr = resolve_flats(
+                tiles, tile_size=args.tile_size, super_tiles=args.super_tiles,
+            ).localCheckpoint()
         resolve_stats = {
             "resolved_flats": d8_ovr.filter(F.col("d8") > 0).count(),
             "unresolved_flats": d8_ovr.filter(F.col("d8") == 0).count(),
-            "bfs_rounds": rm.get("bfs_rounds"),
+            "bfs_rounds": rec["resolve_flats"]["rounds"],
         }
     pixels = focal_terrain_pixels(tiles, tile_size=args.tile_size).localCheckpoint()
     if d8_ovr is not None:
@@ -159,19 +158,19 @@ def _run_hydro(spark, args, F) -> dict:
             .drop("rd8")
             .localCheckpoint()
         )
-    bm: dict = {}
-    basins = d8_basins(d8_successors(pixels), rounds=None, metrics=bm)
+    with guard.recording() as basin_rec:
+        basins = d8_basins(d8_successors(pixels), rounds=None)
     sizes = basins.groupBy("label").agg(F.count("*").alias("n_px"))
     base = 4294967296
     largest = [
         {"bx": r["label"] // base, "by": r["label"] % base, "n_px": r["n_px"]}
         for r in sizes.orderBy(F.col("n_px").desc(), "label").limit(args.top).collect()
     ]
-    fm: dict = {}
-    acc = flow_accumulation(
-        tiles, tile_size=args.tile_size, super_tiles=args.super_tiles,
-        metrics=fm, d8_override=d8_ovr,
-    ).localCheckpoint()
+    with guard.recording() as acc_rec:
+        acc = flow_accumulation(
+            tiles, tile_size=args.tile_size, super_tiles=args.super_tiles,
+            d8_override=d8_ovr,
+        ).localCheckpoint()
     acc_stats = acc.agg(
         F.max("acc").alias("mx"),
         F.sum((F.col("acc") >= args.min_accum).cast("long")).alias("streams"),
@@ -181,8 +180,8 @@ def _run_hydro(spark, args, F) -> dict:
     streams_ids = acc.filter(F.col("acc") >= args.min_accum).select(
         (F.col("gx") * F.lit(base) + F.col("gy")).alias("id")
     )
-    sm: dict = {}
-    orders = strahler_order(d8_successors(pixels), streams_ids, metrics=sm)
+    with guard.recording() as order_rec:
+        orders = strahler_order(d8_successors(pixels), streams_ids)
     order_hist = {
         int(r["strahler"]): int(r["n"])
         for r in orders.groupBy("strahler").agg(F.count("*").alias("n")).collect()
@@ -196,14 +195,14 @@ def _run_hydro(spark, args, F) -> dict:
             "n_tiles": tiles.count(),
             "n_pixels": pixels.count(),
             "n_basins": sizes.count(),
-            "basin_rounds": bm.get("basin_rounds"),
+            "basin_rounds": basin_rec["d8_basins"]["rounds"],
             "largest_basins": largest,
             "max_accum": acc_stats["mx"],
             "stream_pixels": acc_stats["streams"],
             "min_accum": args.min_accum,
-            "coarse_rounds": fm.get("coarse_rounds"),
+            "coarse_rounds": acc_rec["flow_accumulation"]["rounds"],
             "strahler_orders": order_hist,
-            "n_junctions": sm.get("n_junctions"),
+            "n_junctions": order_rec["strahler_order"].get("junctions"),
         },
     }
 
@@ -295,6 +294,7 @@ def _run_cost(spark, args) -> dict:
     treated as a cost raster (operators/costdist.py)."""
     from pyspark.sql import functions as F
 
+    from versatiles_rs_spark import guard
     from versatiles_rs_spark.operators.costdist import (
         cost_distance,
         least_cost_path,
@@ -306,11 +306,11 @@ def _run_cost(spark, args) -> dict:
     sources = parse_cells(args.sources)
     targets = parse_cells(args.targets) if args.targets else []
     tiles = _load_tiles(spark, args.table, args.zoom).localCheckpoint()
-    m: dict = {}
-    cd = cost_distance(
-        tiles, sources, tile_size=args.tile_size, blocked=args.blocked,
-        allocate=True, metrics=m, super_tiles="auto",
-    ).localCheckpoint()
+    with guard.recording() as rec:
+        cd = cost_distance(
+            tiles, sources, tile_size=args.tile_size, blocked=args.blocked,
+            allocate=True, super_tiles="auto",
+        ).localCheckpoint()
     agg = cd.agg(
         F.count("*").alias("cells"),
         F.sum((F.col("dist") >= 0).cast("long")).alias("reachable"),
@@ -328,15 +328,14 @@ def _run_cost(spark, args) -> dict:
             "cells": agg["cells"],
             "reachable": int(agg["reachable"]),
             "max_dist": int(agg["max_dist"]),
-            "dijkstra_rounds": m.get("dijkstra_rounds"),
+            "dijkstra_rounds": rec["cost_distance"]["rounds"],
             "allocation": alloc,
         },
     }
     if targets:
-        pm: dict = {}
         paths = least_cost_path(
             tiles, sources, targets, tile_size=args.tile_size,
-            blocked=args.blocked, metrics=pm, super_tiles="auto",
+            blocked=args.blocked, super_tiles="auto",
         )
         rows = (
             paths.groupBy("tid")
@@ -495,6 +494,7 @@ def main(argv=None):
 
     from pyspark.sql import functions as F
 
+    from versatiles_rs_spark import guard
     from versatiles_rs_spark.session import get_spark
 
     spark = get_spark(app_name="analyze", master=args.master, shuffle_partitions=8)
@@ -668,12 +668,12 @@ def main(argv=None):
                 out["stdbscan"] = {"skipped": f"needs {args.ts_col} column"}
                 continue
             id_col = args.id_col or pts.columns[0]
-            metrics: dict = {}
-            df = st_dbscan(
-                pts, id_col, args.lon, args.lat, args.ts_col,
-                eps_space=args.eps, eps_time_s=args.eps_time,
-                min_pts=args.min_pts, metrics=metrics,
-            ).cache()
+            with guard.recording() as rec:
+                df = st_dbscan(
+                    pts, id_col, args.lon, args.lat, args.ts_col,
+                    eps_space=args.eps, eps_time_s=args.eps_time,
+                    min_pts=args.min_pts,
+                ).cache()
             roles = {r["role"]: r["cnt"] for r in
                      df.groupBy("role").agg(F.count("*").alias("cnt")).collect()}
             sizes = (
@@ -683,7 +683,7 @@ def main(argv=None):
             out["stdbscan"] = {
                 "eps": args.eps,
                 "eps_time_s": args.eps_time,
-                "min_pts": metrics.get("min_pts", args.min_pts),
+                "min_pts": rec["st_dbscan"]["min_pts"],
                 "core": roles.get(2, 0),
                 "border": roles.get(1, 0),
                 "noise": roles.get(0, 0),
@@ -942,11 +942,11 @@ def main(argv=None):
             from versatiles_rs_spark.joins.dbscan import grid_dbscan
 
             id_col = args.id_col or pts.columns[0]
-            metrics: dict = {}
-            df = grid_dbscan(
-                pts, id_col, args.lon, args.lat, eps=args.eps,
-                min_pts=args.min_pts, metrics=metrics,
-            ).cache()
+            with guard.recording() as rec:
+                df = grid_dbscan(
+                    pts, id_col, args.lon, args.lat, eps=args.eps,
+                    min_pts=args.min_pts,
+                ).cache()
             roles = {r["role"]: r["cnt"] for r in
                      df.groupBy("role").agg(F.count("*").alias("cnt")).collect()}
             sizes = (
@@ -955,7 +955,7 @@ def main(argv=None):
             )
             out["dbscan"] = {
                 "eps": args.eps,
-                "min_pts": metrics.get("min_pts", args.min_pts),
+                "min_pts": rec["grid_dbscan"]["min_pts"],
                 "core": roles.get(2, 0),
                 "border": roles.get(1, 0),
                 "noise": roles.get(0, 0),

@@ -166,7 +166,7 @@ def _lsh_candidate_pairs(sig: DataFrame, id_col: str, bucket_cap: int) -> DataFr
 
     banded = sig.select(id_col, F.posexplode("sig").alias("band", "val"))
     if bucket_cap:
-        banded = _cap_buckets(banded, ["band", "val"], bucket_cap)
+        banded = _cap_buckets(banded, ["band", "val"], bucket_cap, "cosine_pairs_lsh")
     l, r = banded.alias("l"), banded.alias("r")
     return (
         l.join(
@@ -427,86 +427,6 @@ def train_ivf_centroids(
                 n = np.linalg.norm(v)
                 if n > 0:
                     c[j] = v / n
-    return c
-
-
-def train_ivf_centroids_distributed(
-    vectors: DataFrame,
-    nlist: int = 16,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    iters: int = 10,
-    metrics: dict | None = None,
-) -> np.ndarray:
-    """Distributed spherical k-means for training sets that exceed a driver
-    sample: every Lloyd iteration is one mapInPandas pass that assigns each
-    vector to its nearest broadcast centroid and emits per-(partition,
-    cluster) PARTIAL sums — at most `partitions x nlist` slim rows cross to
-    the driver per iteration, never an embedding column (the full-corpus
-    analog of the reference's bounded warp state, not a collect).
-
-    Determinism: init is the same rule as the sample trainer (the nlist rows
-    smallest under (hash(id), id)); partials carry their partitionId and are
-    reduced on the driver in sorted (pid, cluster) order, so float summation
-    order is fixed. With identical init and one partition this reproduces
-    `train_ivf_centroids` exactly; across partitions the only drift is
-    float64 re-association (~1e-15), parity-pinned in tests/test_pq.py."""
-    from pyspark import TaskContext
-
-    sc = vectors.sparkSession.sparkContext
-    init_rows = (
-        vectors.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .orderBy(F.hash(F.col("_id")), F.col("_id"))
-        .limit(nlist)
-        .collect()
-    )
-    c = np.vstack([np.asarray(r._v, dtype=np.float64) for r in init_rows])
-    c /= np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-300)
-
-    slim = vectors.select(F.col(vec_col).alias("_v")).cache()
-    part_schema = "pid int, cluster int, s array<double>, n long"
-    max_partial_rows = 0
-    try:
-        for _ in range(iters):
-            bc = sc.broadcast(c)
-
-            def partials(batches):
-                cen = bc.value
-                pid = TaskContext.get().partitionId()
-                sums = np.zeros_like(cen)
-                counts = np.zeros(len(cen), dtype=np.int64)
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    m = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
-                    m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-300)
-                    assign = np.argmax(m @ cen.T, axis=1)
-                    np.add.at(sums, assign, m)
-                    np.add.at(counts, assign, 1)
-                hit = np.flatnonzero(counts)
-                yield pd.DataFrame(
-                    {"pid": pid, "cluster": hit,
-                     "s": list(sums[hit]), "n": counts[hit]}
-                )
-
-            rows = slim.mapInPandas(partials, schema=part_schema).collect()
-            max_partial_rows = max(max_partial_rows, len(rows))
-            agg = np.zeros_like(c)
-            tot = np.zeros(nlist, dtype=np.int64)
-            for r in sorted(rows, key=lambda r: (r.pid, r.cluster)):
-                agg[r.cluster] += np.asarray(r.s, dtype=np.float64)
-                tot[r.cluster] += r.n
-            for j in range(nlist):
-                if tot[j]:
-                    n = np.linalg.norm(agg[j])
-                    if n > 0:
-                        c[j] = agg[j] / n
-            bc.destroy()
-    finally:
-        slim.unpersist()
-    if metrics is not None:
-        metrics["max_partial_rows"] = max_partial_rows
     return c
 
 

@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
+from .. import guard
+
 _LOG = logging.getLogger("versatiles_rs_spark.dedup")
 
 # splitmix64-derived hash family seeds (deterministic)
@@ -210,9 +212,7 @@ def _expand_pairs(
     return within.unionByName(cross)
 
 
-def _cap_buckets(
-    bucketed: DataFrame, key_cols: list, cap: int, metrics: dict | None = None
-) -> DataFrame:
+def _cap_buckets(bucketed: DataFrame, key_cols: list, cap: int, op: str) -> DataFrame:
     """Drop rows in hash buckets larger than `cap` members.
 
     Even after exact pre-collapse, a family of near-identical (not byte-
@@ -229,13 +229,11 @@ def _cap_buckets(
     Recall is never traded silently (VERDICT r2): the over-cap keys are
     collected driver-side (few by design — this replaces the broadcast-
     exchange build job rather than adding one), the dropped bucket/row
-    counts are logged, and when `metrics` is a dict the counts are
-    accumulated into it ("capped_buckets", "capped_rows")."""
+    counts are logged and noted under the caller's `op` ("capped_buckets",
+    "capped_rows")."""
     hot_rows = bucketed.groupBy(*key_cols).count().filter(F.col("count") > cap).collect()
     n_rows = int(sum(r["count"] for r in hot_rows))
-    if metrics is not None:
-        metrics["capped_buckets"] = metrics.get("capped_buckets", 0) + len(hot_rows)
-        metrics["capped_rows"] = metrics.get("capped_rows", 0) + n_rows
+    guard.note(op, capped_buckets=len(hot_rows), capped_rows=n_rows)
     if hot_rows:
         _LOG.warning(
             "bucket cap %d dropped %d rows across %d hot buckets (recall trade)",
@@ -258,7 +256,6 @@ def minhash_lsh_pairs(
     est_margin: float = 0.25,
     pre_collapse: bool = True,
     bucket_cap: int = 500,
-    metrics: dict | None = None,
     max_broadcast_pairs: int = 2_000_000,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash-LSH banding, Jaccard-verified.
@@ -317,7 +314,9 @@ def minhash_lsh_pairs(
         id_col, F.posexplode("bands").alias("band", "bucket")
     )
     if bucket_cap:
-        banded = _cap_buckets(banded, ["band", "bucket"], bucket_cap, metrics)
+        banded = _cap_buckets(
+            banded, ["band", "bucket"], bucket_cap, "minhash_lsh_pairs"
+        )
     left = banded.alias("l")
     right = banded.alias("r")
     pair_ids = (
@@ -403,7 +402,6 @@ def simhash_pairs(
     max_hamming: int = 3,
     pre_collapse: bool = True,
     bucket_cap: int = 500,
-    metrics: dict | None = None,
     max_broadcast_pairs: int = 2_000_000,
 ) -> DataFrame:
     """Near-dup pairs at Hamming distance <= r on 64-bit SimHash.
@@ -448,7 +446,7 @@ def simhash_pairs(
         id_col, "sim", F.posexplode("bv").alias("band", "val")
     )
     if bucket_cap:
-        banded = _cap_buckets(banded, ["band", "val"], bucket_cap, metrics)
+        banded = _cap_buckets(banded, ["band", "val"], bucket_cap, "simhash_pairs")
     l, r = banded.alias("l"), banded.alias("r")
     pairs = (
         l.join(

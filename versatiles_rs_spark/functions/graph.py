@@ -115,13 +115,12 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 40,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """(id, component) for every id appearing in `pairs`; component is the
     minimum id reachable in the undirected pair graph. Isolated ids (no
     pairs) are the caller's to union in — they are their own components.
-    When `metrics` is a dict, records the number of star rounds executed
-    under "cc_rounds" (no silent unbounded iteration).
+    Notes the star rounds executed as `rounds` (no silent unbounded
+    iteration).
 
     Small contracted graphs take a guarded driver solve: each star round
     costs ~4 fixed Spark jobs REGARDLESS of edge count (the
@@ -139,11 +138,8 @@ def connected_components(
         .filter(F.col("u") != F.col("v"))
         .dropDuplicates(["u", "v"])
     )
-    pdf = guard.collect_small(edges_lazy, _DRIVER_MAX_EDGES)
+    pdf = guard.collect_small(edges_lazy, _DRIVER_MAX_EDGES, "connected_components")
     if pdf is not None:
-        if metrics is not None:
-            metrics["cc_rounds"] = 0
-            metrics["cc_driver_edges"] = len(pdf)
         return pairs.sparkSession.createDataFrame(
             _driver_union_find(pdf), schema="id long, component long"
         )
@@ -157,8 +153,7 @@ def connected_components(
         prev_sig = sig
     else:
         raise RuntimeError(f"connected_components: no fixed point in {max_iter} rounds")
-    if metrics is not None:
-        metrics["cc_rounds"] = rounds
+    guard.note("connected_components", rounds=rounds)
     # fixed point: every edge is (node, root). Roots point to themselves.
     nodes = edges.select(F.col("u").alias("id"), F.col("v").alias("component"))
     roots = edges.select(F.col("v").alias("id")).distinct().withColumn(
@@ -192,7 +187,6 @@ def pagerank_flows(
     iterations: int = 10,
     damping_pct: int = 85,
     scale: int = 1_000_000_000_000,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """Weighted PageRank over an OD flow graph (o_x,o_y)->(d_x,d_y) in
     FIXED-POINT int64 arithmetic — the determinism trick that makes an
@@ -250,8 +244,7 @@ def pagerank_flows(
     if n == 0:
         return flows.sparkSession.createDataFrame([], "x long, y long, pr long")
     base = (scale * (100 - damping_pct) // 100) // n
-    if metrics is not None:
-        metrics["pagerank_nodes"] = n
+    guard.note("pagerank_flows", nodes=n)
 
     pr = nodes.withColumn("pr", F.lit(scale // n).cast("long"))
     for _ in range(iterations):
@@ -283,7 +276,6 @@ def label_propagation_flows(
     flows: DataFrame,
     weight_col: str = "n_trips",
     rounds: int = 5,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """Community detection on an OD flow graph by SYNCHRONOUS weighted
     label propagation (Raghavan et al. 2007), made fully deterministic
@@ -317,8 +309,7 @@ def label_propagation_flows(
     lab = sym.select(F.col("v").alias("id")).distinct().withColumn(
         "label", F.col("id")
     )
-    if metrics is not None:
-        metrics["lpa_rounds"] = rounds
+    guard.note("label_propagation_flows", rounds=rounds)
     win = Window.partitionBy("v").orderBy(F.col("sw").desc(), F.col("label").asc())
     for _ in range(rounds):
         votes = (

@@ -62,7 +62,9 @@ def mixture_sample(
 ) -> DataFrame:
     """Downsample `df` so the output's `domain_col` composition matches
     `targets` (normalized), at the largest size needing no upsampling."""
-    cnt = guard.collect_small(df.groupBy(domain_col).count(), _MAX_DOMAINS)
+    cnt = guard.collect_small(
+        df.groupBy(domain_col).count(), _MAX_DOMAINS, "mixture_sample"
+    )
     if cnt is None:
         raise ValueError(
             f"mixture_sample: >{_MAX_DOMAINS} domains — aggregate upstream first"

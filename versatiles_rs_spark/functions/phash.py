@@ -43,7 +43,6 @@ def phash_neardup_pairs(
     max_hamming: int = 8,
     pre_collapse: bool = True,
     bucket_cap: int = 500,
-    metrics: dict | None = None,
     max_broadcast_pairs: int = 2_000_000,
 ) -> DataFrame:
     """All (id_a, id_b, hamming) pairs with popcount(a ^ b) <= max_hamming.
@@ -75,7 +74,7 @@ def phash_neardup_pairs(
         id_col, "ph", F.posexplode("bv").alias("band", "val")
     )
     if bucket_cap:
-        banded = _cap_buckets(banded, ["band", "val"], bucket_cap, metrics)
+        banded = _cap_buckets(banded, ["band", "val"], bucket_cap, "phash_neardup_pairs")
     l, r = banded.alias("l"), banded.alias("r")
     pairs = (
         l.join(

@@ -50,6 +50,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import guard
+
 _CELL_OFF = 1 << 20  # grid offsets: |floor(coord/s)| < 2^20 for any sane eps
 
 
@@ -136,12 +138,11 @@ def grid_dbscan(
     lat_col: str = "lat",
     eps: float = 2.0,
     min_pts: int | None = None,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """(id, cluster, role) for every input point. cluster = min core id of
     the density-connected component (-1 for noise); role 2/1/0 =
-    core/border/noise. `metrics` receives the CC round count and the
-    resolved min_pts.
+    core/border/noise. Notes the resolved `min_pts`; the cell-graph CC
+    notes its own path and rounds under "connected_components".
 
     min_pts=None self-tunes to floor(mean |N_eps|) + 1 — the k-dist-knee
     heuristic collapsed to its cheapest deterministic form: cores are the
@@ -165,8 +166,7 @@ def grid_dbscan(
         tot, cnt = counts.agg(F.sum("n"), F.count("*")).collect()[0]
         # float(tot) then divide = the oracle's CAST(sum AS DOUBLE)/count
         min_pts = int(math.floor(float(tot or 0) / cnt)) + 1 if cnt else 1
-    if metrics is not None:
-        metrics["min_pts"] = min_pts
+    guard.note("grid_dbscan", min_pts=min_pts)
     cores = counts.filter(F.col("n") >= min_pts).select(F.col("ia").alias("id"))
 
     # supernode contraction: CC over DISTINCT cross-cell core-core cell
@@ -180,7 +180,7 @@ def grid_dbscan(
     cell_edges = (
         core_pairs.filter(F.col("ca") < F.col("cb")).select("ca", "cb").distinct()
     )
-    comp = connected_components(cell_edges, src="ca", dst="cb", metrics=metrics)
+    comp = connected_components(cell_edges, src="ca", dst="cb")
     # per-cell min core id; component label = min over its cells; isolated
     # core cells (no cross-cell core link) label themselves
     cell_min = core_pairs.groupBy(F.col("ca").alias("cell")).agg(

@@ -41,6 +41,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import guard
 from .dbscan import _CELL_OFF, _cell_cols
 
 #: fixed time-bin anchor: 2000-01-01T00:00:00Z in epoch microseconds
@@ -145,12 +146,11 @@ def st_dbscan(
     eps_space: float = 2.0,
     eps_time_s: int = 3600,
     min_pts: int | None = None,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """(id, cluster, role) per input point — grid_dbscan's contract with
     the space-time neighborhood. min_pts=None self-tunes to
     floor(mean |N_st|) + 1 with the exact sum/count arithmetic of
-    grid_dbscan (see its docstring for why not F.avg). Time bins must fit
+    grid_dbscan (see its docstring for why not F.avg), noted as `min_pts`. Time bins must fit
     the packing: ts in [2000-01-01, 2000-01-01 + 2^21 * eps_time_s) —
     capacity-guarded with a real scan-time check (max us), not a comment."""
     from ..functions.graph import connected_components
@@ -184,8 +184,7 @@ def st_dbscan(
     if min_pts is None:
         tot, cnt = stats.tot, stats.cnt
         min_pts = int(math.floor(float(tot or 0) / cnt)) + 1 if cnt else 1
-    if metrics is not None:
-        metrics["min_pts"] = min_pts
+    guard.note("st_dbscan", min_pts=min_pts)
     cores = counts.filter(F.col("n") >= min_pts).select(F.col("ia").alias("id"))
 
     core_pairs = (
@@ -197,7 +196,7 @@ def st_dbscan(
     snode_edges = (
         core_pairs.filter(F.col("sa") < F.col("sb")).select("sa", "sb").distinct()
     )
-    comp = connected_components(snode_edges, src="sa", dst="sb", metrics=metrics)
+    comp = connected_components(snode_edges, src="sa", dst="sb")
     snode_min = core_pairs.groupBy(F.col("sa").alias("snode")).agg(
         F.min("ia").alias("mc")
     )

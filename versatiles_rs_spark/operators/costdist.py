@@ -180,7 +180,6 @@ def cost_distance(
     max_rounds: int = 64,
     allocate: bool = False,
     emit_cost: bool = False,
-    metrics: dict | None = None,
     _resolved: tuple[int, bool] | None = None,
 ) -> DataFrame:
     """(x, y, bytes) cost-raster tile table -> (gx, gy, dist): minimum
@@ -195,7 +194,8 @@ def cost_distance(
     super_tiles="auto" sizes the block to the memory guard and, when one
     aligned block covers the raster, emits in a single solve job with no
     border rounds (resolve_super_tiles).  _resolved lets a caller that
-    already resolved (S, covered) skip the duplicate extent job."""
+    already resolved (S, covered) skip the duplicate extent job.  Notes
+    the border-Jacobi `rounds` run (0 when one block covers the raster)."""
     ts = int(tile_size)
     S, covered = (
         _resolved if _resolved is not None
@@ -358,8 +358,7 @@ def cost_distance(
         # one aligned super-tile holds the whole raster: interior labels
         # are already exact after a single group solve — no border can
         # improve anything, so skip the Jacobi loop and both probes
-        if metrics is not None:
-            metrics["dijkstra_rounds"] = 0
+        guard.note("cost_distance", rounds=0)
         return run_round(None, emit_all=True)
 
     border = run_round(None)
@@ -386,8 +385,7 @@ def cost_distance(
             "path forest crosses more super-tiles than the bound; raise "
             "super_tiles or max_rounds"
         )
-    if metrics is not None:
-        metrics["dijkstra_rounds"] = rounds
+    guard.note("cost_distance", rounds=rounds)
     return run_round(halo_copies(border), emit_all=True)
 
 
@@ -406,7 +404,6 @@ def least_cost_path(
     band: int = 0,
     blocked: int | None = None,
     max_rounds: int = 64,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """Least-cost path backtrace — the GRASS r.drain / ArcGIS Cost Path
     operator: for each target cell, every cell on its minimum-cost path
@@ -441,7 +438,8 @@ def least_cost_path(
     pred^i(t) for i < 2^k, so log2(longest path) slim self-join rounds,
     fixpoint by marked-count probe.  Doubling is sound because pred is
     FUNCTIONAL (out-degree 1 — the one graph class the CLAUDE.md minimax
-    lesson's pointer doubling rescues)."""
+    lesson's pointer doubling rescues).  The doubling path notes its
+    `rounds`."""
     ts = int(tile_size)
     S, covered = resolve_super_tiles(tiles, ts, super_tiles)
     G = S * ts
@@ -449,7 +447,7 @@ def least_cost_path(
     cd = cost_distance(
         tiles, sources, tile_size=ts, super_tiles=S, payload=payload,
         band=band, blocked=blocked, max_rounds=max_rounds,
-        emit_cost=True, metrics=metrics, _resolved=(S, covered),
+        emit_cost=True, _resolved=(S, covered),
     )
     cdk = (
         cd.filter(F.col("dist") >= 0)
@@ -585,7 +583,7 @@ def least_cost_path(
     if not covered:
         pred_in = pred_in.unionByName(halo.filter(F.col("dist") <= max_d))
     pred_lazy = pred_in.groupBy("sx", "sy").applyInPandas(pred_pass, schema=_PRED)
-    pp = guard.collect_small(pred_lazy, _DRIVER_MAX_ROWS)
+    pp = guard.collect_small(pred_lazy, _DRIVER_MAX_ROWS, "least_cost_path")
     if pp is not None:
         nxt = {
             (int(x), int(y)): (int(d), int(px), int(py))
@@ -609,9 +607,6 @@ def least_cost_path(
                 d, px, py = hit
                 rows.append((tid, x, y, d))
                 x, y = px, py
-        if metrics is not None:
-            metrics["walk_rounds"] = 0
-            metrics["pred_rows"] = len(pp)
         return spark.createDataFrame(
             rows, "tid long, gx long, gy long, dist long"
         )
@@ -646,8 +641,7 @@ def least_cost_path(
         raise RuntimeError(
             f"least_cost_path: walk open after {max_rounds} doubling rounds"
         )
-    if metrics is not None:
-        metrics["walk_rounds"] = rounds
+    guard.note("least_cost_path", rounds=rounds)
     return marked.join(cdk.select("gx", "gy", "dist"), ["gx", "gy"]).select(
         "tid", "gx", "gy", "dist"
     )

@@ -464,7 +464,6 @@ def d8_basins(
     succ_df: DataFrame,
     rounds: int | None = None,
     max_rounds: int = 40,
-    metrics: dict | None = None,
     checkpoint_every: int = 2,
 ) -> DataFrame:
     """Drainage-basin labeling by POINTER DOUBLING over the D8 functional
@@ -486,7 +485,7 @@ def d8_basins(
     rounds cost 2^k plan references — 2 keeps that at 4 while halving
     the eager actions (fixpoint mode checkpoints every round because the
     change probe needs both sides materialized anyway).  Returns
-    (id, label).
+    (id, label) and notes the doubling `rounds` run.
 
     Guarded driver solve (the contracted-CC pattern): each relational
     round costs fixed Spark job overhead regardless of row count, so
@@ -495,12 +494,10 @@ def d8_basins(
     guard.collect_small job replaces every round (the force_distributed
     test fixture forces the relational path; pointer doubling stays the
     at-scale design)."""
-    pp = guard.collect_small(succ_df, _DRIVER_MAX_ROWS)
+    pp = guard.collect_small(succ_df, _DRIVER_MAX_ROWS, "d8_basins")
     if pp is not None:
         out, r = _driver_doubling(pp, rounds, max_rounds)
-        if metrics is not None:
-            metrics["basin_rounds"] = r
-            metrics["driver_rows"] = len(pp)
+        guard.note("d8_basins", rounds=r)
         return succ_df.sparkSession.createDataFrame(out, "id long, label long")
     cur = succ_df.select("id", F.col("succ").alias("label")).localCheckpoint()
     n = rounds if rounds is not None else max_rounds
@@ -532,8 +529,7 @@ def d8_basins(
     else:
         if rounds is None:
             raise RuntimeError(f"d8_basins: no fixed point in {max_rounds} rounds")
-    if metrics is not None:
-        metrics["basin_rounds"] = r
+    guard.note("d8_basins", rounds=r)
     return cur
 
 

@@ -292,7 +292,6 @@ def flow_accumulation(
     band: int = 0,
     min_accum: int | None = None,
     max_coarse_rounds: int = 64,
-    metrics: dict | None = None,
     weight_fn=None,
     combine: str = "sum",
     d8_override: DataFrame | None = None,
@@ -428,8 +427,11 @@ def flow_accumulation(
     rounds = 0
     total = None
     inflow = None
-    w_pd = guard.collect_small(w_df, _ACCUM_MAX_COARSE)
-    e_pd = None if w_pd is None else guard.collect_small(edges, _ACCUM_MAX_COARSE)
+    w_pd = guard.collect_small(w_df, _ACCUM_MAX_COARSE, "flow_accumulation")
+    e_pd = (
+        None if w_pd is None
+        else guard.collect_small(edges, _ACCUM_MAX_COARSE, "flow_accumulation")
+    )
     if e_pd is not None:
         succ_m = dict(zip(e_pd["id"].astype(int), e_pd["succ"].astype(int)))
         val = dict(zip(w_pd["id"].astype(int), w_pd["w"].astype(int)))
@@ -485,9 +487,7 @@ def flow_accumulation(
                 raise RuntimeError(
                     f"flow_accumulation: coarse relaxation open after {max_coarse_rounds} rounds"
                 )
-    if metrics is not None:
-        metrics["coarse_rounds"] = rounds
-        metrics["coarse_inflow_total"] = int(total or 0)
+    guard.note("flow_accumulation", rounds=rounds, inflow_total=int(total or 0))
 
     # forwarded inflow can terminate at an exit target that is NOT a
     # valid entry anywhere (flow leaving the raster through a foreign
@@ -537,7 +537,6 @@ def resolve_flats(
     payload: str = "bytes",
     band: int = 0,
     max_bfs_rounds: int = 64,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """(gx, gy, dist, d8): towards-lower flat resolution — the
     Garbrecht & Martz (1997) / Barnes et al. (2014, "An efficient
@@ -801,8 +800,7 @@ def resolve_flats(
             "spans more super-tiles than the bound; raise super_tiles or "
             "max_bfs_rounds"
         )
-    if metrics is not None:
-        metrics["bfs_rounds"] = rounds
+    guard.note("resolve_flats", rounds=rounds)
     return (
         state.unionByName(halo_copies(state))
         .groupBy("sx", "sy")
@@ -817,7 +815,6 @@ def strahler_order(
     succ_df: DataFrame,
     streams: DataFrame,
     max_rounds: int = 64,
-    metrics: dict | None = None,
     doubling_rounds: int | None = None,
 ) -> DataFrame:
     """(id, strahler): Strahler stream order over an extracted channel
@@ -931,9 +928,8 @@ def strahler_order(
 
     # 3. junction-DAG solve
     anchors_df = cells.filter(F.col("indeg") != 1).select("id")
-    edge_pd = guard.collect_small(edges, _STRAHLER_MAX_EDGES)
+    edge_pd = guard.collect_small(edges, _STRAHLER_MAX_EDGES, "strahler_order")
     if edge_pd is not None:
-        n_edges = len(edge_pd)
         # sequential Kahn on the driver over the contracted DAG
         incoming: dict[int, list[int]] = {}
         out: dict[int, int] = {}
@@ -963,11 +959,7 @@ def strahler_order(
                 ready.append(j)
         if any(v > 0 for v in remaining.values()):
             raise AssertionError("strahler_order: junction DAG has a cycle")
-        if metrics is not None:
-            metrics["strahler_rounds"] = 0
-            metrics["n_junctions"] = len(incoming)
-            metrics["solve"] = "driver"
-            metrics["n_edges"] = n_edges
+        guard.note("strahler_order", junctions=len(incoming))
         ordr = succ_df.sparkSession.createDataFrame(
             list(order.items()), "id long, w long"
         )
@@ -978,7 +970,6 @@ def strahler_order(
 
     # distributed Jacobi relaxation from the all-ones lower bound
     anchors_df = anchors_df.localCheckpoint()
-    n_edges = edges.count()
     ordr = anchors_df.select("id", F.lit(1).cast("long").alias("w")).localCheckpoint()
     total = ordr.agg(F.sum("w")).collect()[0][0] or 0
     rounds = 0
@@ -1013,11 +1004,7 @@ def strahler_order(
             raise RuntimeError(
                 f"strahler_order: junction relaxation open after {max_rounds} rounds"
             )
-    if metrics is not None:
-        metrics["strahler_rounds"] = rounds
-        metrics["n_junctions"] = junctions.count()
-        metrics["solve"] = "relax"
-        metrics["n_edges"] = n_edges
+    guard.note("strahler_order", rounds=rounds)
     return anchor.join(
         ordr.select(F.col("id").alias("anchor"), F.col("w").alias("strahler")),
         "anchor",
@@ -1102,7 +1089,6 @@ def fill_depressions(
     super_tiles: int = 1,
     payload: str = "bytes",
     band: int = 0,
-    metrics: dict | None = None,
     emit: str = "pixels",
 ) -> DataFrame:
     """Distributed depression filling — Barnes et al. 2016 ("Parallel
@@ -1216,14 +1202,13 @@ def fill_depressions(
     # round relaxation needs thousands of rounds (measured: open after 64
     # rounds at a mere 4x4 tiles).  Guarded: _FILL_MAX_EDGES caps the
     # collect; past it, raise and point at larger super_tiles.
-    edge_pd = guard.collect_small(edges, _FILL_MAX_EDGES)
+    edge_pd = guard.collect_small(edges, _FILL_MAX_EDGES, "fill_depressions")
     if edge_pd is None:
         raise ValueError(
             f"fill_depressions: watershed graph has > {_FILL_MAX_EDGES} "
             "edges; raise super_tiles to shrink the perimeter fraction "
             "(graph size ~ 4/(S*ts))"
         )
-    n_edges = len(edge_pd)
     import heapq
 
     adj: dict[int, list[tuple[int, int]]] = {}
@@ -1243,9 +1228,7 @@ def fill_depressions(
             if nd < best.get(vtx, _INF):
                 best[vtx] = nd
                 heapq.heappush(heap, (nd, vtx))
-    if metrics is not None:
-        metrics["spill_nodes"] = len(adj)
-        metrics["spill_edges"] = n_edges
+    guard.note("fill_depressions", nodes=len(adj))
     unreached = set(adj) - set(best)
     if unreached:
         raise AssertionError(

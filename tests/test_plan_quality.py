@@ -255,6 +255,21 @@ def test_flagship_scan_python_keeps_blobs_out_of_jvm(spark, tmp_path):
     assert "scan(path#" in plan  # the Python stage consumes file paths only
 
 
+def test_python_scan_file_list_runs_no_python_task(spark, tmp_path):
+    """The Python-side scan hands its file list to Spark as a local table:
+    no RDD scan, whose tasks would start Python workers only to pass the
+    path strings on, so the scan's one Python node is the reader itself."""
+    from versatiles_rs_spark import fixtures
+    from versatiles_rs_spark.sources.arrow_scan import read_parquet_pythonside
+
+    path = str(tmp_path / "images")
+    fixtures.images_df(spark, 40, partitions=4).write.parquet(path)
+    plan = plan_of(read_parquet_pythonside(spark, path, columns=["image_id"]))
+    assert "LocalTableScan [path#" in plan, plan
+    assert "ExistingRDD" not in plan, plan
+    assert plan.count("MapInPandas") == 1, plan
+
+
 def test_image_curation_family_pure_jvm_no_text_in_shuffle(spark, sf_dir):
     """caption_dedup / clip_filter / laion_curation: zero Python nodes, and
     neither raw caption text nor embedding arrays appear as attributes of

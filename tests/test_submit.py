@@ -42,3 +42,64 @@ def test_spark_submit_pyfiles_flagship(tmp_path):
     assert metrics and metrics[0]["job"] == "flagship" and metrics[0]["result_rows"] > 0
     # the committed level landed with its metrics sidecar
     assert os.path.exists(os.path.join(out_dir, "level=12", "_metrics.json"))
+
+
+_DAEMON_PROBE = '''
+import json
+
+import pandas as pd
+
+from versatiles_rs_spark.session import get_spark
+
+
+def probe(batches):
+    import zipimport
+
+    import submit_conf_mod  # only on the PYTHONPATH given with --conf
+
+    flush = zipimport.zipimporter.invalidate_caches.__code__.co_filename
+    for pdf in batches:
+        yield pd.DataFrame({"flush": [flush + submit_conf_mod.TAG] * len(pdf)})
+
+
+spark = get_spark(master="local[2]", shuffle_partitions=2)
+rows = spark.range(0, 8, 1, 4).mapInPandas(probe, "flush string").collect()
+print(json.dumps(sorted({r.flush for r in rows})))
+spark.stop()
+'''
+
+
+@pytest.mark.slow
+def test_spark_submit_pyfiles_daemon_imports_from_zip(tmp_path):
+    """A get_spark session under spark-submit --py-files, from a foreign
+    cwd: the worker daemon (spark.python.daemon.module) starts from the
+    zip, and its workers run the patched import-cache flush. A PYTHONPATH
+    given with --conf stays on the workers' path."""
+    from tools.make_pyfiles_zip import build
+
+    zip_path = build(str(tmp_path / "pkg.zip"))
+    script = tmp_path / "probe_job.py"
+    script.write_text(_DAEMON_PROBE)
+    lib = tmp_path / "lib"
+    lib.mkdir()
+    (lib / "submit_conf_mod.py").write_text('TAG = "+conf"\n')
+    submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
+    res = subprocess.run(
+        [
+            submit,
+            "--master",
+            "local[2]",
+            "--conf",
+            f"spark.executorEnv.PYTHONPATH={lib}",
+            "--py-files",
+            zip_path,
+            str(script),
+        ],
+        cwd=str(tmp_path),
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    flush = [json.loads(l) for l in res.stdout.splitlines() if l.startswith("[")]
+    assert flush == [[os.path.join(zip_path, "versatiles_rs_spark", "pyworker.py") + "+conf"]]

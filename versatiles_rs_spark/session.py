@@ -11,7 +11,38 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
+
+# the directory (or, under --py-files, the zip) the engine imports from
+_IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_DAEMON = "spark.python.daemon.module"
+_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+
+
+def _worker_conf(master: str, conf: dict) -> dict:
+    """Settings that start the Python workers through pyworker, which drops
+    the per-task re-read of every zip on the worker path.
+
+    The daemon module is imported before any --py-files zip is on that
+    path, so the workers also need the engine's import root. That root is a
+    path on this host: only a local master's workers are sure to see it, so
+    any other master gets no setting. A daemon module set already (in
+    `conf`, --conf or spark-defaults) is kept; the root is appended to a
+    PYTHONPATH set already."""
+    if not master.startswith("local"):
+        return {}
+    # launch the gateway with `conf` (as getOrCreate would) so SparkConf()
+    # reads back what --conf and spark-defaults set
+    SparkContext._ensure_initialized(conf=SparkConf().setAll(conf.items()))
+    prior = {**dict(SparkConf().getAll()), **conf}
+    out = {}
+    if _DAEMON not in prior:
+        out[_DAEMON] = "versatiles_rs_spark.pyworker"
+    paths = [p for p in prior.get(_PYTHONPATH, "").split(os.pathsep) if p]
+    if _IMPORT_ROOT not in paths:
+        out[_PYTHONPATH] = os.pathsep.join([*paths, _IMPORT_ROOT])
+    return out
 
 
 def get_spark(
@@ -24,22 +55,25 @@ def get_spark(
     cores = 32
     if master.startswith("local[") and master[6:-1].isdigit():
         cores = int(master[6:-1])
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or max(cores, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+    conf = {
+        "spark.app.name": app_name,
+        "spark.master": master,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or max(cores, 8)),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
         # bound Arrow batches: grouped raster mosaics are ~MBs per group
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-    )
-    for k, v in (extra_conf or {}).items():
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+        "spark.ui.enabled": "false",
+        "spark.sql.session.timeZone": "UTC",
+        **(extra_conf or {}),
+    }
+    conf.update(_worker_conf(master, conf))
+    builder = SparkSession.builder
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

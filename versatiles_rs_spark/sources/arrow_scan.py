@@ -73,9 +73,13 @@ def read_parquet_pythonside(
         spark_schema = schema
 
     # round-robin repartition: exactly one file per task (hash-partitioning
-    # on the path column could collide two files into one straggler task)
+    # on the path column could collide two files into one straggler task).
+    # A pandas frame plans as a LocalTableScan; a list of tuples would make
+    # an RDD scan that runs Python tasks just to hand over the path strings.
+    import pandas as pd
+
     paths_df = spark.createDataFrame(
-        [(f,) for f in files], "path string"
+        pd.DataFrame({"path": files}), "path string"
     ).repartition(len(files))
 
     def scan(batches):

@@ -173,9 +173,9 @@ def main():
     ap.add_argument("--out", required=True)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from versatiles_rs_spark.session import get_job_spark
 
-    spark = SparkSession.builder.appName("curation").getOrCreate()
+    spark = get_job_spark("curation")
     t0 = time.time()
     _, metrics = run(spark, args.n_images, args.out, n_shards=args.n_shards)
     print(json.dumps({"job": "curation", **metrics, "sec": round(time.time() - t0, 2)}))

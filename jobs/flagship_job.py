@@ -26,9 +26,9 @@ def main():
     ap.add_argument("--out", default=None, help="optional output dir (parquet, level-committed)")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from versatiles_rs_spark.session import get_job_spark
 
-    spark = SparkSession.builder.appName("flagship").getOrCreate()
+    spark = get_job_spark("flagship")
     from versatiles_rs_spark.pipeline import flagship
     from versatiles_rs_spark.sinks.checkpoint import LevelCheckpointer
 

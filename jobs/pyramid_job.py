@@ -29,10 +29,11 @@ def main():
     ap.add_argument("--out", required=True)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = SparkSession.builder.appName("pyramid").getOrCreate()
+    from versatiles_rs_spark.session import get_job_spark
+
+    spark = get_job_spark("pyramid")
     from versatiles_rs_spark import fixtures
     from versatiles_rs_spark.sinks.checkpoint import LevelCheckpointer, build_pyramid_resumable
     from versatiles_rs_spark.sinks.writers import verify_hilbert_monotonic, write_hilbert_sorted

@@ -135,14 +135,12 @@ def main():
 
     import os
 
-    from pyspark.sql import SparkSession
+    from versatiles_rs_spark.session import get_job_spark
 
-    spark = (
-        SparkSession.builder.appName("refresh")
-        # tiny-relation pyramid levels: spark-submit's default 200 shuffle
-        # partitions = pure task overhead here
-        .config("spark.sql.shuffle.partitions", str(os.cpu_count() or 8))
-        .getOrCreate()
+    # tiny-relation pyramid levels: spark-submit's default 200 shuffle
+    # partitions = pure task overhead here
+    spark = get_job_spark(
+        "refresh", {"spark.sql.shuffle.partitions": str(os.cpu_count() or 8)}
     )
     t0 = time.time()
     _, metrics = run(spark, args.out, z_max=args.grid_zoom, z_min=args.z_min,

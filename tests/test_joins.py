@@ -1,4 +1,4 @@
-"""Spatial join tests: PIP (broadcast + cell-partitioned) against a
+"""Spatial join tests: PIP (in-task probe + cell-partitioned) against a
 pure-python oracle, kNN cell-pruned against brute force."""
 
 import numpy as np
@@ -9,12 +9,13 @@ from pyspark.sql import functions as F
 from versatiles_rs_spark.fixtures import polygons_pdf
 from versatiles_rs_spark.joins.knn import knn_bruteforce, knn_cell_pruned
 from versatiles_rs_spark.joins.pip import (
-    pip_join_polygons_broadcast,
     pip_join_polygons_partitioned,
     pip_join_rects,
     points_in_polygon,
     points_in_polygon_multi,
+    polygon_probe,
 )
+from versatiles_rs_spark.udfs import schema_with
 
 
 def test_ray_casting_square():
@@ -63,15 +64,75 @@ def _oracle_pip(pdf, polys):
 
 
 def test_pip_broadcast_matches_oracle(spark):
+    """The small-layer path: the layer rides in the kernel's closure and
+    each task probes its own batches (polygon_probe)."""
     df, pdf = _points_df(spark)
     polys = polygons_pdf(40)
-    poly_list = [
-        (r.poly_id, [np.asarray(ring, float) for ring in r.rings]) for _, r in polys.iterrows()
-    ]
-    got = pip_join_polygons_broadcast(df, poly_list, out="poly_id")
+    probe = polygon_probe(polys)
+    got = df.mapInPandas(
+        lambda batches: (probe(b) for b in batches),
+        schema=schema_with(df.schema, ("poly_id", "string")),
+    )
     got_pairs = sorted((int(r.pid), r.poly_id) for r in got.collect())
     assert got_pairs == _oracle_pip(pdf, polys)
     assert len(got_pairs) > 50  # meaningful coverage
+
+
+def _probe_pairs(probe, pdf):
+    out = probe(pdf)
+    return sorted(zip(out.pid.astype(int), out.poly_id))
+
+
+def test_polygon_probe_edge_cases_match_oracle():
+    """Seeded random points plus every vertex and edge midpoint of the
+    layer (the tile-aligned j == 0 box, the j % 7 == 0 holes, L-shapes) and
+    points in two overlapping polygons: the probe's pairs equal the
+    brute-force even-odd test, pair for pair."""
+    rng = np.random.default_rng(11)
+    layer = polygons_pdf(30)
+    overlap = pd.DataFrame(
+        {
+            "poly_id": ["ovA", "ovB"],
+            "rings": [
+                [[[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [0.0, 10.0], [0.0, 0.0]]],
+                [[[5.0, 5.0], [15.0, 5.0], [15.0, 15.0], [5.0, 15.0], [5.0, 5.0]]],
+            ],
+            "zone": ["z", "z"],
+        }
+    )
+    polys = pd.concat([layer, overlap], ignore_index=True)
+    verts = np.array([p for rings in polys.rings for ring in rings for p in ring])
+    mids = np.array(
+        [
+            [(a[0] + b[0]) / 2, (a[1] + b[1]) / 2]
+            for rings in polys.rings
+            for ring in rings
+            for a, b in zip(ring[:-1], ring[1:])
+        ]
+    )
+    rnd = np.column_stack([rng.uniform(-170, 170, 3000), rng.uniform(-80, 80, 3000)])
+    # inside both ovA and ovB, inside ovA's bbox only, on ovB's corner
+    extra = np.array([[7.0, 7.0], [2.0, 2.0], [5.0, 5.0], [10.0, 10.0]])
+    xy = np.vstack([rnd, verts, mids, extra])
+    pdf = pd.DataFrame({"pid": np.arange(len(xy)), "lon": xy[:, 0], "lat": xy[:, 1]})
+    probe = polygon_probe(polys)
+
+    got = _probe_pairs(probe, pdf)
+    assert got == _oracle_pip(pdf, polys)
+    hits = {pid for pid, _ in got}
+    assert {poly for _, poly in got} >= {"poly000000", "poly000007", "ovA", "ovB"}
+    both = len(xy) - 4  # (7, 7) lies in both overlapping squares: two rows
+    assert [p for p in got if p[0] == both] == [(both, "ovA"), (both, "ovB")]
+    assert any(pid >= len(rnd) for pid in hits)  # some vertex/edge points hit
+
+    # an empty batch and a batch with no hit keep the input columns, the
+    # appended poly_id and their dtypes
+    for batch in (pdf.iloc[:0], pd.DataFrame({"pid": [1, 2], "lon": [179.5, -179.5], "lat": [89.0, -89.0]})):
+        out = probe(batch)
+        assert len(out) == 0
+        assert list(out.columns) == ["pid", "lon", "lat", "poly_id"]
+        assert out.dtypes["lon"] == np.float64 and out.dtypes["pid"] == batch.dtypes["pid"]
+        assert out.dtypes["poly_id"] == object
 
 
 def test_pip_partitioned_matches_broadcast(spark):

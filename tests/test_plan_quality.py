@@ -255,6 +255,37 @@ def test_flagship_scan_python_keeps_blobs_out_of_jvm(spark, tmp_path):
     assert "scan(path#" in plan  # the Python stage consumes file paths only
 
 
+@pytest.mark.parametrize("path", ["synth", "python", "jvm"])
+def test_flagship_plan_is_one_python_node_then_aggregate(spark, tmp_path, path):
+    """The flagship's PIP test runs inside its fused scan+encode task
+    (joins.pip.polygon_probe), so every flagship plan is one Python node,
+    no join, and one hash exchange: the aggregate's. Read from AQE's final
+    plan, after the action ran."""
+    import re
+
+    from versatiles_rs_spark import fixtures
+    from versatiles_rs_spark.pipeline import flagship, flagship_scan
+
+    if path == "synth":
+        df = flagship(spark, n_images=200, n_polygons=10)
+    else:
+        images = str(tmp_path / "images")
+        fixtures.images_df(spark, 200, partitions=4).write.parquet(images)
+        df = flagship_scan(spark, images, n_polygons=10, scan_mode=path)
+    df.collect()
+    plan = plan_of(df)
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    python_nodes = re.findall(
+        r"\b(?:MapInPandas|MapInArrow|PythonMapInArrow|ArrowEvalPython|BatchEvalPython"
+        r"|FlatMapGroupsIn\w+|FlatMapCoGroupsIn\w+|AggregateInPandas|WindowInPandas)\b",
+        final,
+    )
+    assert len(python_nodes) == 1, final
+    assert "Join" not in final, final
+    assert final.count("Exchange hashpartitioning") == 1, final
+    assert "poly_id" in final.split("Exchange hashpartitioning")[1].split("\n")[0]
+
+
 def test_python_scan_file_list_runs_no_python_task(spark, tmp_path):
     """The Python-side scan hands its file list to Spark as a local table:
     no RDD scan, whose tasks would start Python workers only to pass the

@@ -103,3 +103,81 @@ def test_spark_submit_pyfiles_daemon_imports_from_zip(tmp_path):
     assert res.returncode == 0, res.stderr[-2000:]
     flush = [json.loads(l) for l in res.stdout.splitlines() if l.startswith("[")]
     assert flush == [[os.path.join(zip_path, "versatiles_rs_spark", "pyworker.py") + "+conf"]]
+
+
+_JOB_PROBE = '''
+import json
+
+import pandas as pd
+
+from versatiles_rs_spark.session import get_job_spark
+
+
+def probe(batches):
+    import zipimport
+
+    flush = zipimport.zipimporter.invalidate_caches.__code__.co_filename
+    for pdf in batches:
+        yield pd.DataFrame({"flush": [flush] * len(pdf)})
+
+
+spark = get_job_spark("probe")
+rows = spark.range(0, 8, 1, 4).mapInPandas(probe, "flush string").collect()
+print(json.dumps({
+    "master": spark.sparkContext.master,
+    "partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+    "flush": sorted({r.flush for r in rows}),
+}))
+spark.stop()
+'''
+
+
+@pytest.mark.slow
+def test_job_session_keeps_submit_conf_and_gets_daemon(tmp_path):
+    """jobs/* start through session.get_job_spark: the master and settings
+    given to spark-submit are kept, and on a local master the workers run
+    through the pyworker daemon (from the zip, in a foreign cwd)."""
+    from tools.make_pyfiles_zip import build
+
+    zip_path = build(str(tmp_path / "pkg.zip"))
+    script = tmp_path / "job_probe.py"
+    script.write_text(_JOB_PROBE)
+    submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
+    res = subprocess.run(
+        [
+            submit,
+            "--master",
+            "local[2]",
+            "--conf",
+            "spark.sql.shuffle.partitions=3",
+            "--py-files",
+            zip_path,
+            str(script),
+        ],
+        cwd=str(tmp_path),
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    out = [json.loads(l) for l in res.stdout.splitlines() if l.startswith("{")]
+    assert out == [
+        {
+            "master": "local[2]",
+            "partitions": "3",
+            "flush": [os.path.join(zip_path, "versatiles_rs_spark", "pyworker.py")],
+        }
+    ]
+
+
+def test_jobs_start_sessions_through_session_module():
+    """No job builds its own SparkSession: a bare builder session misses
+    the pyworker daemon, so every Python task re-reads the zips on the
+    worker path."""
+    jobs = os.path.join(REPO, "jobs")
+    offenders = [
+        f
+        for f in sorted(os.listdir(jobs))
+        if f.endswith(".py") and "SparkSession.builder" in open(os.path.join(jobs, f)).read()
+    ]
+    assert offenders == []

@@ -152,6 +152,8 @@ def images_with_tiles_df(
     target_fmt: str = "png",
     quality_table: dict | None = None,
     emit_bytes: bool = True,
+    then=None,
+    then_fields: str = "",
 ) -> DataFrame:
     """Fused single-pass pipeline stage: generate images, derive lon/lat from
     phash, assign (z,x,y), re-encode into the tile format, compute the Hilbert
@@ -169,16 +171,15 @@ def images_with_tiles_df(
     encoded blobs never cross Arrow back to the JVM — the encode still runs
     per row, only the ~KB payload transfer is elided. Sinks and container
     writers keep the default (they need the bytes).
+
+    `then` (pdf -> pdf) runs on each encoded batch in the same task, as the
+    stage's last step (the flagship's PIP probe); `then_fields` is the DDL
+    of the columns it appends.
     """
     # default 90: measured floor for the BASELINE per-row invariant (PSNR >=
     # 40 dB) with the REAL webp codec on 16px lossy->lossy chains (q85 bottoms
     # out at 39.4 dB on the gradient fixtures; q90 at 40.6 dB)
     qt = quality_table or {"default": 90}
-    payload_field = "bytes binary" if emit_bytes else "nbytes long"
-    schema = (
-        "image_id string, w int, h int, fmt string, caption string, phash bigint, "
-        f"lon double, lat double, z int, x long, y long, hilbert long, {payload_field}"
-    )
 
     def gen(batches):
         for pdf in batches:
@@ -187,9 +188,12 @@ def images_with_tiles_df(
                 continue
             out = images_pdf(len(ids), size=size, offset=int(ids[0]))
             i = np.arange(int(ids[0]), int(ids[0]) + len(ids), dtype=np.int64)
-            yield _derive_and_encode(out, i, zoom, skew, target_fmt, qt, emit_bytes)
+            tiles = _derive_and_encode(out, i, zoom, skew, target_fmt, qt, emit_bytes)
+            yield then(tiles) if then is not None else tiles
 
-    return spark.range(0, n, 1, partitions).mapInPandas(gen, schema=schema)
+    return spark.range(0, n, 1, partitions).mapInPandas(
+        gen, schema=tile_kernel_schema(emit_bytes, then_fields)
+    )
 
 
 def _derive_and_encode(
@@ -265,11 +269,12 @@ def materialize_images(
     return path
 
 
-def tile_kernel_schema(emit_bytes: bool) -> str:
+def tile_kernel_schema(emit_bytes: bool, then_fields: str = "") -> str:
     payload_field = "bytes binary" if emit_bytes else "nbytes long"
+    extra = f", {then_fields}" if then_fields else ""
     return (
         "image_id string, w int, h int, fmt string, caption string, phash bigint, "
-        f"lon double, lat double, z int, x long, y long, hilbert long, {payload_field}"
+        f"lon double, lat double, z int, x long, y long, hilbert long, {payload_field}{extra}"
     )
 
 
@@ -300,6 +305,8 @@ def tiles_from_images_df(
     target_fmt: str = "jpg",
     quality_table: dict | None = None,
     emit_bytes: bool = False,
+    then=None,
+    then_fields: str = "",
 ) -> DataFrame:
     """Fused scan-side stage: given the STORED images table (IMAGES_SCHEMA,
     e.g. a parquet/Iceberg scan), decode + re-encode into the tile format and
@@ -307,16 +314,18 @@ def tiles_from_images_df(
     once, and with emit_bytes=False only slim columns come back to the JVM.
 
     Same kernel as images_with_tiles_df minus the synthetic generation: this
-    is the pipeline as it runs against a real table at 100 TB."""
+    is the pipeline as it runs against a real table at 100 TB. `then` and
+    `then_fields` as in images_with_tiles_df."""
     kernel = make_tile_kernel(zoom, skew, target_fmt, quality_table, emit_bytes)
 
     def gen(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            yield kernel(pdf)
+            tiles = kernel(pdf)
+            yield then(tiles) if then is not None else tiles
 
-    return images.mapInPandas(gen, schema=tile_kernel_schema(emit_bytes))
+    return images.mapInPandas(gen, schema=tile_kernel_schema(emit_bytes, then_fields))
 
 
 def polygons_pdf(n: int = 100) -> pd.DataFrame:

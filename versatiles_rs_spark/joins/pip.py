@@ -1,19 +1,22 @@
-"""Point-in-polygon joins: broadcast and cell-partitioned strategies.
+"""Point-in-polygon joins: rectangles, an in-task probe, cell partitions.
 
 The reference's nearest analog is its polygon machinery (TileOutline union,
 /root/reference/versatiles_geometry/src/tile_outline/mod.rs:60-66 and the
 geometry types versatiles_geometry/src/geo/geometry.rs:25); the PIP join
 itself is target behavior from BASELINE.json's north rule.
 
-Two physical strategies (SURVEY.md §2.4):
+Three physical strategies (SURVEY.md §2.4):
 
-1. **Broadcast** (small polygon layer): rectangles become a broadcast
-   nested-loop range join (pure SQL, oracle-checkable); arbitrary polygons
-   are shipped as WKB-like packed arrays inside a task broadcast and probed
-   with a vectorized numpy ray-casting kernel in mapInPandas.
-2. **Cell-partitioned** (large layer): cover each polygon with tiles at a
-   cell zoom, explode; assign each point its cell; equi-join on the cell
-   (shuffle hash join, prunable, salt-friendly) then exact ray-cast test.
+1. **Rectangles**: a broadcast nested-loop range join (pure SQL,
+   oracle-checkable).
+2. **Probe** (small polygon layer, `polygon_probe`): the layer is packed
+   into numpy arrays closed over by a `pdf -> pdf` kernel, which a fused
+   Python stage (the flagship's scan + encode task) runs on its own batches
+   with a vectorized numpy ray-casting test — no join, no extra stage.
+3. **Cell-partitioned** (large or DataFrame layer): cover each polygon with
+   tiles at a cell zoom, explode; assign each point its cell; equi-join on
+   the cell (shuffle hash join, prunable, salt-friendly) then exact
+   ray-cast test.
 
 Edge rule: points exactly on a polygon edge use the half-open crossing-number
 convention (a point on a 'lower' edge is inside) — deterministic and
@@ -83,47 +86,56 @@ def _rings_bbox(rings: list[np.ndarray]) -> tuple[float, float, float, float]:
     )
 
 
-def pip_join_polygons_broadcast(
-    points: DataFrame,
-    polygons: list[tuple[str, list[np.ndarray]]],
+def polygon_probe(
+    polys_pdf,
     lon: str = "lon",
     lat: str = "lat",
-    out: str = "zone",
-) -> DataFrame:
-    """Broadcast PIP join against arbitrary polygons (list of
-    (poly_id, rings)); emits one output row per (point, containing polygon).
+    poly_id: str = "poly_id",
+    rings_col: str = "rings",
+):
+    """PIP test against a small polygon layer as a `pdf -> pdf` kernel, to
+    run inside a fused Python stage: no join, no extra Python node.
 
-    The polygon list is closed over by the Arrow-batched kernel (Spark ships
-    it once per task via the serialized closure — the same driver-side
-    HashMap pattern as vector_update_properties.rs:50-77). Each batch
-    prefilters by polygon bbox before the exact ray-cast.
+    The kernel emits one row per (point, containing polygon), the input
+    columns plus `poly_id`; a batch without hits gives a zero-row frame that
+    still has the column. Candidates come from each polygon's bbox (points
+    sorted by lon once per batch, so a polygon costs two binary searches
+    before any ray is cast). The bbox is an exact superset under the
+    half-open crossing rule: a point outside it crosses no edge, or every
+    edge of a closed ring an even number of times.
+
+    The closure holds only packed numpy arrays (vertices, ring and polygon
+    offsets, bboxes, ids copied out of the frame), so pickling it ships no
+    pandas block and no nested lists of the layer.
     """
-    import pandas as pd
+    layer = [to_rings(v) for v in polys_pdf[rings_col]]
+    flat = [r for rs in layer for r in rs]
+    verts = np.concatenate(flat) if flat else np.empty((0, 2))
+    ring_off = np.cumsum([0] + [len(r) for r in flat])
+    poly_off = np.cumsum([0] + [len(rs) for rs in layer])
+    bbox = np.array([_rings_bbox(rs) for rs in layer], dtype=np.float64).reshape(-1, 4)
+    ids = np.array([str(v) for v in polys_pdf[poly_id]], dtype=str)
 
-    from ..udfs import schema_with
+    def probe(pdf):
+        px = pdf[lon].to_numpy(np.float64)
+        py = pdf[lat].to_numpy(np.float64)
+        order = np.argsort(px, kind="stable")
+        lo = np.searchsorted(px[order], bbox[:, 0], "left")
+        hi = np.searchsorted(px[order], bbox[:, 2], "right")
+        hit_rows, hit_polys = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+        for p in np.nonzero(hi > lo)[0]:
+            idx = order[lo[p]:hi[p]]
+            idx = idx[(py[idx] >= bbox[p, 1]) & (py[idx] <= bbox[p, 3])]
+            if idx.size == 0:
+                continue
+            rings = [verts[ring_off[r]:ring_off[r + 1]] for r in range(poly_off[p], poly_off[p + 1])]
+            hit = idx[points_in_polygon_multi(px[idx], py[idx], rings)]
+            hit_rows.append(hit)
+            hit_polys.append(np.full(hit.size, p))
+        pids = ids[np.concatenate(hit_polys)].astype(object)
+        return pdf.iloc[np.concatenate(hit_rows)].assign(**{poly_id: pids})
 
-    prepped = [(pid, rings, _rings_bbox(rings)) for pid, rings in polygons]
-    schema = schema_with(points.schema, (out, "string"))
-
-    def probe(batches):
-        for pdf in batches:
-            px = pdf[lon].to_numpy(np.float64)
-            py = pdf[lat].to_numpy(np.float64)
-            outs = []
-            for pid, rings, (bx0, by0, bx1, by1) in prepped:
-                cand = (px >= bx0) & (px <= bx1) & (py >= by0) & (py <= by1)
-                idx = np.nonzero(cand)[0]
-                if idx.size == 0:
-                    continue
-                hit = idx[points_in_polygon_multi(px[idx], py[idx], rings)]
-                if hit.size:
-                    sub = pdf.iloc[hit].copy()
-                    sub[out] = pid
-                    outs.append(sub)
-            if outs:
-                yield pd.concat(outs)
-
-    return points.mapInPandas(probe, schema=schema)
+    return probe
 
 
 def polygon_cover_cells(rings: list[np.ndarray], cell_zoom: int) -> list[tuple[int, int]]:

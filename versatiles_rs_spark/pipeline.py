@@ -13,13 +13,17 @@ Stages (all DataFrame-native, Arrow-batched Python only for pixel work):
 3. encode tiles: re-encode each image payload into the target tile format
    with per-zoom quality (raster_format.rs:115-165 semantics) and attach the
    Hilbert tile_id (PMTiles order, tile_hilbert_index.rs:81-113).
-4. PIP-join the records against a polygon layer (cell-partitioned equi-join
-   + exact ray-cast; broadcast path for small layers).
-5. aggregate per (zone, z, x, y) — the materialized result.
+4. PIP-test each record against the polygon layer in the same task: the
+   layer is small, so `joins.pip.polygon_probe` packs it into the kernel's
+   closure and the fused stage emits one row per (record, polygon) — no
+   join, no second Python node (joins.pip.pip_join_polygons_partitioned
+   stays the path for large or DataFrame layers).
+5. aggregate per (poly_id, z, x, y) — the materialized result.
 
-Scale notes (SURVEY.md §4): one shuffle (the cell equi-join); tile/cell keys
-are plain columns so partition pruning works; hot-cell skew handled by AQE
-skew-join (session.py) + optional salting; Arrow batch size bounded.
+Scale notes (SURVEY.md §4): one shuffle (the aggregate's exchange, of
+~50-byte pre-aggregated rows); tile/cell keys are plain columns so
+partition pruning works; Arrow batch size bounded. The plan is
+scan+encode+probe -> aggregate (tests/test_plan_quality.py pins it).
 """
 
 from __future__ import annotations
@@ -30,8 +34,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import fixtures
-from .joins.pip import pip_join_polygons_partitioned
+from .joins.pip import polygon_probe
 from .operators.raster import parse_quality_table
+
+# the column polygon_probe appends: one row per (image, containing polygon)
+_POLY_FIELD = "poly_id string"
+
+
+def _aggregate(probed: DataFrame) -> DataFrame:
+    return probed.groupBy("poly_id", "z", "x", "y").agg(
+        F.count("*").alias("n_images"),
+        F.sum("nbytes").alias("tile_bytes"),
+        F.min("hilbert").alias("min_tile_id"),
+    )
 
 
 def flagship(
@@ -56,17 +71,15 @@ def flagship(
       done by hand.
     - tiles re-encode as JPEG (real libjpeg), so the per-zoom quality table
       (raster_format.rs semantics) actually applies — PNG ignored it.
-    - the PIP shuffle moves ~50-byte rows, not ~10 KB rows (200x less
-      shuffle IO).
-    - the PIP join itself is a cell-keyed equi-join (shuffle hash, AQE skew
-      handling) followed by an Arrow-batched exact ray-cast.
+    - the PIP test runs as the fused stage's last step (polygon_probe):
+      the only shuffle is the aggregate's, over slim pre-aggregated rows.
     """
     # 4 waves of ~n/(4*cores)-row tasks: measured sweet spot (64→128 parts at
     # 640k/32 cores cut wall time 28% — better balance, same per-task Arrow
     # batching); at 100 TB the equivalent knob is maxPartitionBytes
     parts = partitions or spark.sparkContext.defaultParallelism * 4
     qt = parse_quality_table(quality)
-    encoded = fixtures.images_with_tiles_df(
+    probed = fixtures.images_with_tiles_df(
         spark,
         n_images,
         size=img_size,
@@ -76,17 +89,10 @@ def flagship(
         target_fmt=target_fmt,
         quality_table=qt,
         emit_bytes=False,
+        then=polygon_probe(fixtures.polygons_pdf(n_polygons)),
+        then_fields=_POLY_FIELD,
     )
-    slim = encoded.select(
-        "image_id", "lon", "lat", "z", "x", "y", "hilbert", "nbytes",
-    )
-    polys = fixtures.polygons_df(spark, n_polygons)
-    joined = pip_join_polygons_partitioned(slim, polys, cell_zoom=6)
-    return joined.groupBy("poly_id", "z", "x", "y").agg(
-        F.count("*").alias("n_images"),
-        F.sum("nbytes").alias("tile_bytes"),
-        F.min("hilbert").alias("min_tile_id"),
-    )
+    return _aggregate(probed)
 
 
 def flagship_scan(
@@ -100,7 +106,7 @@ def flagship_scan(
 ) -> DataFrame:
     """Deployment-shaped flagship: READ the stored images table (the north
     rule's "10^12-image Iceberg table (SF-scaled sample)"), then the same
-    pipeline — fused decode+tile-encode+coords, slim PIP join, aggregate.
+    pipeline — fused decode+tile-encode+coords+PIP probe, aggregate.
 
     vs `flagship` (which synthesizes its input inline): the stored-format
     ENCODE is ingest cost paid once at materialization, not per query — no
@@ -110,13 +116,14 @@ def flagship_scan(
     scan_mode:
     - "python" (default): fused pyarrow scan — file splits go through the
       JVM, the Python task reads its part-file directly and runs the tile
-      kernel in place, so blobs move storage -> Python ONCE and only slim
-      columns ever reach the JVM (sources/arrow_scan.py). Measured 12.3 ->
-      ~6 s at 100k/local[32] vs the JVM scan, which parquet-decodes every
-      blob in the JVM and re-serializes it over Arrow.
+      kernel and the PIP probe in place, so blobs move storage -> Python
+      ONCE and only slim columns ever reach the JVM (sources/arrow_scan.py).
+      Measured 12.3 -> ~6 s at 100k/local[32] vs the JVM scan, which
+      parquet-decodes every blob in the JVM and re-serializes it over Arrow.
     - "jvm": spark.read.parquet -> mapInPandas; the Catalyst-native shape,
       kept for plan comparison and as the path predicate pushdown favors."""
     qt = parse_quality_table(quality)
+    probe = polygon_probe(fixtures.polygons_pdf(n_polygons))
     if scan_mode == "python":
         from .sources.arrow_scan import read_parquet_pythonside
 
@@ -124,27 +131,17 @@ def flagship_scan(
             zoom=zoom, skew=True, target_fmt=target_fmt,
             quality_table=qt, emit_bytes=False,
         )
-        encoded = read_parquet_pythonside(
-            spark, images_path,
-            schema=fixtures.tile_kernel_schema(emit_bytes=False),
-            kernel=kernel,
+        probed = read_parquet_pythonside(
+            spark, images_path, schema=fixtures.tile_kernel_schema(False, _POLY_FIELD),
+            kernel=lambda pdf: probe(kernel(pdf)),
         )
     else:
-        images = spark.read.parquet(images_path)
-        encoded = fixtures.tiles_from_images_df(
-            images, zoom=zoom, skew=True, target_fmt=target_fmt,
-            quality_table=qt, emit_bytes=False,
+        probed = fixtures.tiles_from_images_df(
+            spark.read.parquet(images_path), zoom=zoom, skew=True,
+            target_fmt=target_fmt, quality_table=qt, emit_bytes=False,
+            then=probe, then_fields=_POLY_FIELD,
         )
-    slim = encoded.select(
-        "image_id", "lon", "lat", "z", "x", "y", "hilbert", "nbytes",
-    )
-    polys = fixtures.polygons_df(spark, n_polygons)
-    joined = pip_join_polygons_partitioned(slim, polys, cell_zoom=6)
-    return joined.groupBy("poly_id", "z", "x", "y").agg(
-        F.count("*").alias("n_images"),
-        F.sum("nbytes").alias("tile_bytes"),
-        F.min("hilbert").alias("min_tile_id"),
-    )
+    return _aggregate(probed)
 
 
 def run_flagship_scan(spark: SparkSession, n_images: int = 20000, **kw) -> dict:

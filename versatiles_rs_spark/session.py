@@ -72,9 +72,23 @@ def get_spark(
         **(extra_conf or {}),
     }
     conf.update(_worker_conf(master, conf))
+    spark = _build(conf)
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
+
+
+def get_job_spark(app_name: str, extra_conf: dict | None = None) -> SparkSession:
+    """Session for a job started by spark-submit (jobs/*): the master and
+    every setting the submit gave stay as they are; the only additions are
+    `extra_conf` and, on a local master, the pyworker settings."""
+    conf = {"spark.app.name": app_name, **(extra_conf or {})}
+    SparkContext._ensure_initialized(conf=SparkConf().setAll(conf.items()))
+    conf.update(_worker_conf(SparkConf().get("spark.master", ""), conf))
+    return _build(conf)
+
+
+def _build(conf: dict) -> SparkSession:
     builder = SparkSession.builder
     for k, v in conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
+    return builder.getOrCreate()

@@ -232,11 +232,11 @@ def test_flagship_payload_never_crosses_arrow(spark):
 
 
 def test_flagship_scan_python_keeps_blobs_out_of_jvm(spark, tmp_path):
-    """Deployment-shaped scan (scan_mode="python"): the JVM plan must carry
-    only file-path strings into the Python stage and slim columns out —
-    the stored `bytes` column is read by pyarrow INSIDE the task and must
-    not appear in any plan node. Exactly one round-robin exchange (the
-    one-file-per-task distribution)."""
+    """Deployment-shaped scan: the JVM plan must carry only file indices
+    into the Python stage and slim columns out — the stored `bytes` column
+    is read by pyarrow INSIDE the task and must not appear in any plan
+    node. No round-robin exchange hands out the files: AQE's final plan has
+    one Exchange, the aggregate's hash exchange."""
     import re
 
     from versatiles_rs_spark import fixtures
@@ -244,18 +244,35 @@ def test_flagship_scan_python_keeps_blobs_out_of_jvm(spark, tmp_path):
 
     path = str(tmp_path / "images")
     fixtures.images_df(spark, 200, partitions=4).write.parquet(path)
-    df = flagship_scan(spark, path, n_polygons=10, scan_mode="python")
+    df = flagship_scan(spark, path, n_polygons=10)
+    df.collect()
     plan = plan_of(df)
     assert not re.search(r"(?<![a-z_])bytes#", plan), "payload column in plan"
     assert "nbytes" in plan
-    # one round-robin exchange distributing file paths (its only column),
-    # one-file-per-task; the PIP join contributes the other Python nodes
-    rr = [ln for ln in plan.splitlines() if "Exchange RoundRobinPartitioning" in ln]
-    assert len(rr) == 1, rr
-    assert "scan(path#" in plan  # the Python stage consumes file paths only
+    assert "RoundRobinPartitioning" not in plan, plan
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    exchanges = [ln for ln in final.splitlines() if re.search(r"\bExchange\b", ln)]
+    assert len(exchanges) == 1 and "Exchange hashpartitioning(poly_id" in exchanges[0], final
+    assert "scan(id#" in plan  # the Python stage consumes file indices only
 
 
-@pytest.mark.parametrize("path", ["synth", "python", "jvm"])
+def test_flagship_scan_action_runs_two_jobs(spark, tmp_path):
+    """One flagship_scan action is the aggregate's map stage and its result
+    stage: two Spark jobs, none spent handing out the part-files."""
+    from versatiles_rs_spark import fixtures
+    from versatiles_rs_spark.pipeline import flagship_scan
+
+    path = str(tmp_path / "images")
+    fixtures.images_df(spark, 200, partitions=4).write.parquet(path)
+    df = flagship_scan(spark, path, n_polygons=10)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    df.collect()
+    # new ids, not a length difference: the status store evicts old jobs
+    assert len(set(tracker.getJobIdsForGroup(None)) - before) == 2
+
+
+@pytest.mark.parametrize("path", ["synth", "python"])
 def test_flagship_plan_is_one_python_node_then_aggregate(spark, tmp_path, path):
     """The flagship's PIP test runs inside its fused scan+encode task
     (joins.pip.polygon_probe), so every flagship plan is one Python node,
@@ -271,7 +288,7 @@ def test_flagship_plan_is_one_python_node_then_aggregate(spark, tmp_path, path):
     else:
         images = str(tmp_path / "images")
         fixtures.images_df(spark, 200, partitions=4).write.parquet(images)
-        df = flagship_scan(spark, images, n_polygons=10, scan_mode=path)
+        df = flagship_scan(spark, images, n_polygons=10)
     df.collect()
     plan = plan_of(df)
     final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
@@ -287,7 +304,7 @@ def test_flagship_plan_is_one_python_node_then_aggregate(spark, tmp_path, path):
 
 
 def test_python_scan_file_list_runs_no_python_task(spark, tmp_path):
-    """The Python-side scan hands its file list to Spark as a local table:
+    """The Python-side scan hands out its file list as a Range of indices:
     no RDD scan, whose tasks would start Python workers only to pass the
     path strings on, so the scan's one Python node is the reader itself."""
     from versatiles_rs_spark import fixtures
@@ -295,8 +312,11 @@ def test_python_scan_file_list_runs_no_python_task(spark, tmp_path):
 
     path = str(tmp_path / "images")
     fixtures.images_df(spark, 40, partitions=4).write.parquet(path)
-    plan = plan_of(read_parquet_pythonside(spark, path, columns=["image_id"]))
-    assert "LocalTableScan [path#" in plan, plan
+    df = read_parquet_pythonside(
+        spark, path, schema="image_id string", kernel=lambda pdf: pdf[["image_id"]]
+    )
+    plan = plan_of(df)
+    assert "Range (0, 4, step=1, splits=4)" in plan, plan
     assert "ExistingRDD" not in plan, plan
     assert plan.count("MapInPandas") == 1, plan
 

@@ -30,19 +30,18 @@ from versatiles_rs_spark.pipeline import run_flagship, run_flagship_scan
 cores = {cores}
 n = {n}
 scan = {scan}
-# fair comparison: each level gets the SAME waves-per-core (4x cores input
-# partitions, shuffle partitions = cores) — the per-cluster tuning a real
-# deployment applies via maxPartitionBytes. Fixed absolute partition counts
-# would penalize the small config with per-task overhead and inflate the
-# efficiency number.
+# synth levels get the SAME waves-per-core (4x cores input partitions);
+# every level gets shuffle partitions = cores. Fixed absolute partition
+# counts would penalize the small config with per-task overhead and inflate
+# the efficiency number.
 spark = get_spark(master=f"local[{{cores}}]", shuffle_partitions=cores)
 if scan:
     # deployment shape: BOTH levels read the IDENTICAL stored parquet table
     # (materialized once on disk, reused) via the fused pyarrow scan — "same
     # job, same input, two cluster sizes" in the rule's own terms.
-    # run_flagship_scan applies the same waves-per-core tuning as the synth
-    # path (maxPartitionBytes sized for ~4 scan tasks/core), i.e. the knob a
-    # real deployment sets per cluster size.
+    # The pyarrow scan runs one task per part-file, so both levels run the
+    # same 128 scan tasks (materialize_images' part count) whatever the core
+    # count: the scan level does NOT get the synth path's waves-per-core.
     run = lambda m: run_flagship_scan(spark, n_images=m)
     run(max(20000, n // 4))   # warm-up (also materializes the stored table)
 else:

@@ -286,9 +286,9 @@ def make_tile_kernel(
     emit_bytes: bool = False,
 ):
     """pdf -> pdf kernel over IMAGES_SCHEMA batches: decode stored format,
-    re-encode into the tile format, attach lon/lat/(z,x,y)/Hilbert.  Shared
-    by tiles_from_images_df (JVM-scan path) and the fused pyarrow scan
-    (sources/arrow_scan.read_parquet_pythonside kernel=...)."""
+    re-encode into the tile format, attach lon/lat/(z,x,y)/Hilbert.  The
+    scan-side half of pipeline.flagship_scan, run inside the pyarrow scan
+    task (sources/arrow_scan.read_parquet_pythonside kernel=...)."""
     qt = quality_table or {"default": 90}
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -296,36 +296,6 @@ def make_tile_kernel(
         return _derive_and_encode(pdf, i, zoom, skew, target_fmt, qt, emit_bytes)
 
     return kernel
-
-
-def tiles_from_images_df(
-    images: DataFrame,
-    zoom: int = 12,
-    skew: bool = True,
-    target_fmt: str = "jpg",
-    quality_table: dict | None = None,
-    emit_bytes: bool = False,
-    then=None,
-    then_fields: str = "",
-) -> DataFrame:
-    """Fused scan-side stage: given the STORED images table (IMAGES_SCHEMA,
-    e.g. a parquet/Iceberg scan), decode + re-encode into the tile format and
-    attach lon/lat/(z,x,y)/Hilbert in ONE mapInPandas — payload crosses Arrow
-    once, and with emit_bytes=False only slim columns come back to the JVM.
-
-    Same kernel as images_with_tiles_df minus the synthetic generation: this
-    is the pipeline as it runs against a real table at 100 TB. `then` and
-    `then_fields` as in images_with_tiles_df."""
-    kernel = make_tile_kernel(zoom, skew, target_fmt, quality_table, emit_bytes)
-
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            tiles = kernel(pdf)
-            yield then(tiles) if then is not None else tiles
-
-    return images.mapInPandas(gen, schema=tile_kernel_schema(emit_bytes, then_fields))
 
 
 def polygons_pdf(n: int = 100) -> pd.DataFrame:

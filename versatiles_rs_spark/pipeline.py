@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from . import fixtures
 from .joins.pip import polygon_probe
 from .operators.raster import parse_quality_table
+from .sources.arrow_scan import read_parquet_pythonside
 
 # the column polygon_probe appends: one row per (image, containing polygon)
 _POLY_FIELD = "poly_id string"
@@ -102,7 +103,6 @@ def flagship_scan(
     n_polygons: int = 200,
     target_fmt: str = "jpg",
     quality: str | int = "0-9:90,10-14:80",
-    scan_mode: str = "python",
 ) -> DataFrame:
     """Deployment-shaped flagship: READ the stored images table (the north
     rule's "10^12-image Iceberg table (SF-scaled sample)"), then the same
@@ -113,67 +113,30 @@ def flagship_scan(
     production tiling job re-encodes its input corpus per run. Output is
     identical (pytest-asserted parity).
 
-    scan_mode:
-    - "python" (default): fused pyarrow scan — file splits go through the
-      JVM, the Python task reads its part-file directly and runs the tile
-      kernel and the PIP probe in place, so blobs move storage -> Python
-      ONCE and only slim columns ever reach the JVM (sources/arrow_scan.py).
-      Measured 12.3 -> ~6 s at 100k/local[32] vs the JVM scan, which
-      parquet-decodes every blob in the JVM and re-serializes it over Arrow.
-    - "jvm": spark.read.parquet -> mapInPandas; the Catalyst-native shape,
-      kept for plan comparison and as the path predicate pushdown favors."""
-    qt = parse_quality_table(quality)
+    Each Python task reads one part-file with pyarrow and runs the tile
+    kernel and the PIP probe in place (sources/arrow_scan.py), so blobs
+    move storage -> Python ONCE and only slim columns ever reach the JVM.
+    Measured 12.3 -> ~6 s at 100k/local[32] against spark.read.parquet ->
+    mapInPandas, which parquet-decodes every blob in the JVM and
+    re-serializes it over Arrow."""
+    kernel = fixtures.make_tile_kernel(
+        zoom=zoom, skew=True, target_fmt=target_fmt,
+        quality_table=parse_quality_table(quality), emit_bytes=False,
+    )
     probe = polygon_probe(fixtures.polygons_pdf(n_polygons))
-    if scan_mode == "python":
-        from .sources.arrow_scan import read_parquet_pythonside
-
-        kernel = fixtures.make_tile_kernel(
-            zoom=zoom, skew=True, target_fmt=target_fmt,
-            quality_table=qt, emit_bytes=False,
-        )
-        probed = read_parquet_pythonside(
-            spark, images_path, schema=fixtures.tile_kernel_schema(False, _POLY_FIELD),
-            kernel=lambda pdf: probe(kernel(pdf)),
-        )
-    else:
-        probed = fixtures.tiles_from_images_df(
-            spark.read.parquet(images_path), zoom=zoom, skew=True,
-            target_fmt=target_fmt, quality_table=qt, emit_bytes=False,
-            then=probe, then_fields=_POLY_FIELD,
-        )
+    probed = read_parquet_pythonside(
+        spark, images_path, schema=fixtures.tile_kernel_schema(False, _POLY_FIELD),
+        kernel=lambda pdf: probe(kernel(pdf)),
+    )
     return _aggregate(probed)
 
 
-def run_flagship_scan(spark: SparkSession, n_images: int = 20000, **kw) -> dict:
-    """Materialize the images table if needed (untimed — ingest), then
-    execute the scan-based flagship and return throughput metrics.
-
-    Scan parallelism: Spark bin-packs small parquet files up to
-    maxPartitionBytes (default 128 MB), which would collapse an SF-scaled
-    sample into a handful of input partitions and starve the fused Python
-    stage.  Repartitioning is NOT the fix — it would shuffle the payload
-    blobs (banned, test_plan_quality).  Instead size maxPartitionBytes so
-    the scan itself yields ~4 tasks/core — the exact knob a 100 TB job
-    tunes, where the same math gives the same wave shape."""
-    import os
-
-    path = fixtures.materialize_images(spark, n_images)
-    total = sum(
-        os.path.getsize(os.path.join(path, f))
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    )
-    want_parts = spark.sparkContext.defaultParallelism * 4
-    part_bytes = max(1 << 20, total // want_parts)
-    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(part_bytes))
-    try:
-        t0 = time.time()
-        out = flagship_scan(spark, path, **kw)
-        joined_rows = out.agg(F.sum("n_images")).collect()[0][0] or 0
-        elapsed = time.time() - t0
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+def _throughput(build, n_images: int) -> dict:
+    """Build the flagship aggregate with `build()`, run it, and report tiles
+    encoded + PIP-joined rows per second (build time included)."""
+    t0 = time.time()
+    joined_rows = build().agg(F.sum("n_images")).collect()[0][0] or 0
+    elapsed = time.time() - t0
     processed = n_images + int(joined_rows)
     return {
         "n_images": n_images,
@@ -183,16 +146,14 @@ def run_flagship_scan(spark: SparkSession, n_images: int = 20000, **kw) -> dict:
     }
 
 
+def run_flagship_scan(spark: SparkSession, n_images: int = 20000, **kw) -> dict:
+    """Materialize the images table if needed (untimed — ingest), then
+    execute the scan-based flagship and return throughput metrics. The scan
+    runs one task per part-file (materialize_images writes 128)."""
+    path = fixtures.materialize_images(spark, n_images)
+    return _throughput(lambda: flagship_scan(spark, path, **kw), n_images)
+
+
 def run_flagship(spark: SparkSession, n_images: int = 20000, **kw) -> dict:
     """Execute the flagship job and return throughput metrics."""
-    t0 = time.time()
-    out = flagship(spark, n_images=n_images, **kw)
-    joined_rows = out.agg(F.sum("n_images")).collect()[0][0] or 0
-    elapsed = time.time() - t0
-    processed = n_images + int(joined_rows)  # tiles encoded + PIP-joined rows
-    return {
-        "n_images": n_images,
-        "pip_rows": int(joined_rows),
-        "sec": round(elapsed, 2),
-        "rows_per_sec": round(processed / elapsed, 1),
-    }
+    return _throughput(lambda: flagship(spark, n_images=n_images, **kw), n_images)
